@@ -37,10 +37,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from bishe_gpu_database_spark.session import scoped_conf
 
-# Tables whose KEY COUNT fits this bound answer the fast-path existence
-# probe by collecting the whole key set (one narrow collect) instead of a
-# broadcast join — the same bound StreamDrainState.key_cache_bound uses.
+# Tables whose KEY COUNT fits this bound answer the existence policy by
+# collecting the whole key set (one narrow collect) instead of a broadcast
+# probe; StreamDrainState.key_cache_bound defaults to it.
 _KEY_PREFETCH_BOUND = 1_000_000
 
 
@@ -116,6 +117,50 @@ def _flags_from_found(found: DataFrame) -> DataFrame:
     )
 
 
+def _abort_cond(reorder: bool):
+    """The Install abort rule as a Column over (raw, war, waw) flags:
+    ``waw ∨ (raw ∧ war)`` with deterministic reordering, else ``waw ∨ raw``
+    (ref: TrancM_func.cuh:181-227)."""
+    if reorder:
+        return F.col("waw") | (F.col("raw") & F.col("war"))
+    return F.col("waw") | F.col("raw")
+
+
+def _last_writes(writes: DataFrame, value_cols: list[str]) -> DataFrame:
+    """Per key, the committed write that installs: WAW-freedom leaves one
+    committed writer per key, and within it the last write (max seq) wins
+    (ref: src/database/ycsb/key_op_chain.cuh:161-189). The smallest-tid
+    tiebreak only matters for the NULL-key group under insert_missing."""
+    w = W.partitionBy("k").orderBy(F.col("tid").asc(), F.col("seq").desc())
+    return (
+        writes.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("k", *[F.col(f"new_{c}").alias(c) for c in value_cols])
+    )
+
+
+def _overlay(base: DataFrame, winners: dict | DataFrame) -> DataFrame:
+    """The install merge ``base ⟕ delta ∪ delta`` (lazy): each delta row
+    replaces its key's base row. A driver-held delta — ``{k: value
+    tuple}`` in base's value-column order — is broadcast, so the merge
+    never shuffles the (100 TB design point) base table; a DataFrame
+    delta is merged as given."""
+    if isinstance(winners, dict):
+        if not winners:
+            return base
+        from pyspark.sql.types import StructField, StructType
+
+        cols = ["k"] + [c for c in base.columns if c != "k"]
+        # Nullable throughout: under insert_missing a NULL key can win.
+        schema = StructType([StructField(c, base.schema[c].dataType, True) for c in cols])
+        winners = F.broadcast(
+            base.sparkSession.createDataFrame(
+                [(k, *vals) for k, vals in winners.items()], schema
+            )
+        )
+    return base.join(winners, "k", "left_anti").unionByName(winners)
+
+
 def aria_epoch(
     kv: DataFrame,
     ops: DataFrame,
@@ -131,18 +176,12 @@ def aria_epoch(
     value_cols = [c for c in kv.columns if c != "k"]
 
     flags = analyze_dependencies(ops, kv, insert_missing=insert_missing)
-    abort_cond = (
-        (F.col("waw") | (F.col("raw") & F.col("war")))
-        if reorder
-        else (F.col("waw") | F.col("raw"))
-    )
-    verdicts = flags.withColumn("committed", ~abort_cond)
+    verdicts = flags.withColumn("committed", ~_abort_cond(reorder))
 
     committed_tids = verdicts.filter(F.col("committed")).select("tid")
 
-    # Install: staged writes of committed txns. WAW-freedom ⇒ one committed
-    # writer per key; within it, last write (max seq) wins. The key must
-    # exist in the snapshot (missing-key ops were skipped at Execute).
+    # Install: staged writes of committed txns. The key must exist in the
+    # snapshot (missing-key ops were skipped at Execute).
     writes = ops.filter(F.col("is_update")).join(
         F.broadcast(committed_tids), "tid", "left_semi"
     )
@@ -152,13 +191,7 @@ def aria_epoch(
         # broadcast direction as the probe: stream the table, broadcast
         # the bounded batch.
         writes = kv.select("k").join(F.broadcast(writes), "k", "inner")
-    w = W.partitionBy("k").orderBy(F.col("tid").asc(), F.col("seq").desc())
-    last_writes = (
-        writes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("k", *[F.col(f"new_{c}").alias(c) for c in value_cols])
-    )
-    new_kv = kv.join(last_writes, "k", "left_anti").unionByName(last_writes)
+    new_kv = _overlay(kv, _last_writes(writes, value_cols))
 
     aborted_ops = ops.join(
         F.broadcast(verdicts.filter(~F.col("committed")).select("tid")), "tid", "left_semi"
@@ -177,161 +210,149 @@ def run_batch(
 ) -> tuple[DataFrame, list[dict]]:
     """Drain a batch: run epochs until no transaction remains, re-numbering
     aborted Tids densely 1…m each round (ref: TransctionManager.cuh:176-184,
-    outer loop ref: src/database/ycsb/db.h:104-109).
+    outer loop ref: src/database/ycsb/db.h:104-109). Returns (final kv
+    DataFrame, per-epoch stats); the final table is a lazy
+    ``base ⟕ delta ∪ delta`` merge evaluated by the caller.
 
-    Returns (final kv DataFrame, per-epoch stats). ``localCheckpoint``
-    truncates lineage each epoch so the plan doesn't grow with iterations.
-
-    Per-epoch cost is proportional to the BATCH, never the table: the
-    snapshot probe reads only key EXISTENCE, and (without insert_missing)
-    the committed writes can never create or drop a key — so the probe is
-    epoch-invariant and runs ONCE, fused into the checkpointed batch
-    before the loop; each epoch is then a single probe-free flags job.
-    The install maintains a small latest-value DELTA — accumulated LAZILY
-    (installs cost zero jobs during the drain) and checkpointed every few
-    epochs only to bound plan depth — that is merged over the base table
-    exactly once at the end.
-    The reference, by contrast, round-trips the WHOLE table through the
-    GPU every epoch (ref: src/database/ycsb/db.h:111-125) — the
-    probe-once + delta formulation is what survives a 100 TB table:
-    epoch cost = two shuffles of the ops batch, table size only paid on
-    the one-time probe and the final snapshot read.
-
-    DRIVER-SIM fast path (r7, rewritten r10): when the batch fits the
-    driver (``driver_sim_threshold`` op rows — legal to hold driver-side
+    One bounded collect (``_collect_batch``) reads the batch. When it
+    fits ``driver_sim_threshold`` op rows — legal to hold driver-side
     because batches are capacity-bounded, the reference caps in-flight
-    txns at 200, ref: TransctionManager.cuh:15), the whole drain runs
-    from ONE bounded collect, exactly like the streamed per-trigger step
-    (``stream_drain_step``): the SCHEDULE is a pure function of the
-    (tid, k, is_update) tuples (``_sim_schedule``), key existence is one
-    bounded broadcast-probe job against the table, and the per-key
-    install winner — newest epoch, then smallest tid, then largest seq,
-    the same composite order the distributed install window uses — is
-    resolved in Python over the already-collected staged values. The r7
-    shape paid 6 jobs before the final merge (ops checkpoint, base
-    checkpoint, tid-universe collect, probe+checkpoint, count, sim
-    collect); this shape pays 2 (batch collect, existence probe) — the
-    rest was pure scheduling latency, the exact cost the reference's
-    in-GPU epoch loop never pays (guide §1.2: fix the distributed
-    algorithm's pass count first). Large batches take the distributed
-    epoch loop unchanged; both paths are pinned bit-identical by
-    tests/test_r7_aria_fastpath.py and the hypothesis serial-oracle
-    suite.
-    """
-    value_cols = [c for c in kv.columns if c != "k"]
-    new_cols = [f"new_{c}" for c in value_cols]
-    spark = kv.sparkSession
-    # ONE bounded collect decides the fast path AND feeds it: ops rows
-    # (schedule tuples + staged values) in a single job. limit(N+1) caps
-    # driver bytes; a batch over the threshold falls through to the
-    # distributed loop below. CollectLimit's default execution probes ONE
-    # partition first and scales up 4x per retry — a sequence of partly
-    # serial jobs; initialNumPartitions = full parallelism turns it into
-    # a single parallel pass (restored immediately).
-    _init_parts_key = "spark.sql.limit.initialNumPartitions"
-    _saved_init_parts = spark.conf.get(_init_parts_key, None)
-    spark.conf.set(_init_parts_key, str(spark.sparkContext.defaultParallelism))
-    try:
-        rows = (
+    txns at 200 (ref: TransctionManager.cuh:15) — the drain runs on the
+    same driver core as ``stream_drain_step``: the existence policy
+    (``_existence``: the whole key set if the table's key count fits
+    ``_KEY_PREFETCH_BOUND``, else one broadcast probe of the batch's
+    keys; skipped under ``insert_missing``), then ``_drain_rows``
+    (Execute's missing-key skip, the ``_sim_schedule`` verdicts and the
+    per-key install winners), then ``_overlay``. That costs the collect
+    plus one or two existence jobs.
+
+    Larger batches take ``_drain_distributed``: the existence probe runs
+    ONCE, fused into the checkpointed batch (committed updates can
+    neither create nor drop a key), each epoch is then one flags job,
+    and installs accumulate in a lazy delta merged over the base table
+    once at the end — epoch cost is two shuffles of the batch, never the
+    table. The reference instead round-trips the whole table through the
+    GPU every epoch (ref: src/database/ycsb/db.h:111-125). Both paths are
+    pinned bit-identical by tests/test_r7_aria_fastpath.py and the
+    hypothesis serial-oracle suite."""
+    new_cols = [f"new_{c}" for c in kv.columns if c != "k"]
+    rows = _collect_batch(ops, new_cols, driver_sim_threshold)
+    if len(rows) > driver_sim_threshold:
+        return _drain_distributed(
+            kv, ops, reorder=reorder, insert_missing=insert_missing, max_epochs=max_epochs
+        )
+    # eager=False pins kv (probe and final merge must observe one table)
+    # without a dedicated materialization job — the existence policy (or
+    # the caller's final-merge read) materializes it.
+    base = kv.localCheckpoint(eager=False)
+    exist = None
+    if not insert_missing:
+        keys = {r["k"] for r in rows if r["k"] is not None}
+        exist = _existence(base, keys, _KEY_PREFETCH_BOUND)[0] if keys else set()
+    stats, winners = _drain_rows(
+        rows, exist, new_cols, reorder=reorder, max_epochs=max_epochs
+    )
+    return _overlay(base, winners), stats
+
+
+def _collect_batch(ops: DataFrame, new_cols: list[str], limit: int) -> list:
+    """The one bounded collect of a batch: schedule tuples and staged
+    values, at most ``limit + 1`` rows so the caller can tell an
+    oversized batch. CollectLimit's default execution scans ONE partition
+    first and scales up 4x per retry — a chain of partly serial jobs;
+    ``initialNumPartitions`` at full parallelism makes it one pass."""
+    spark = ops.sparkSession
+    width = str(spark.sparkContext.defaultParallelism)
+    with scoped_conf(spark, {"spark.sql.limit.initialNumPartitions": width}):
+        return (
             ops.select("tid", "seq", "k", "is_update", *new_cols)
-            .limit(driver_sim_threshold + 1)
+            .limit(limit + 1)
             .collect()
         )
-    finally:
-        if _saved_init_parts is None:
-            spark.conf.unset(_init_parts_key)
-        else:
-            spark.conf.set(_init_parts_key, _saved_init_parts)
-    if len(rows) <= driver_sim_threshold:
-        from pyspark.sql.types import StructField, StructType
 
-        # eager=False pins kv (probe and final merge must observe one
-        # table) without a dedicated materialization job — the existence
-        # probe (or the caller's final-merge read) materializes it.
-        base = kv.localCheckpoint(eager=False)
-        # Collect-phase bookkeeping seeds from the RAW batch: a txn whose
-        # every op targets a missing key still counts in-flight in epoch 1
-        # (it trivially commits — same as the serial oracle).
-        cur = {r["tid"] for r in rows}
-        if insert_missing:
-            # Op-parallel Execute: every non-NULL-key op participates and
-            # committed writes create keys — no existence probe at all.
-            exist = None
-        else:
-            # Execute's missing-key probe, epoch-INVARIANT (committed
-            # updates can neither create nor drop a key, ref:
-            # TrancM_func.cuh:32-34). Same policy as StreamDrainState:
-            # a table whose key count fits the prefetch bound collects
-            # its whole key set (count + narrow collect — measured 0.14s
-            # vs 0.35s for the broadcast-probe machinery at fixture
-            # scale, and the count doubles as the base-checkpoint
-            # materialization the merge reuses); larger tables answer
-            # the batch's bounded key set via ONE broadcast join.
-            keys = sorted({r["k"] for r in rows if r["k"] is not None})
-            if not keys:
-                exist = set()
-            elif base.count() <= _KEY_PREFETCH_BOUND:
-                exist = {r[0] for r in base.select("k").collect()}
-            else:
-                kdf = spark.createDataFrame(
-                    [(k,) for k in keys],
-                    StructType([StructField("k", kv.schema["k"].dataType)]),
-                )
-                exist = {
-                    r[0]
-                    for r in base.select("k")
-                    .join(F.broadcast(kdf), "k", "inner")
-                    .collect()
-                }
-        # Analysis sees only non-NULL-key ops that passed Execute (the
-        # distributed loop filters k.isNotNull() before flags).
-        op_rows = [
-            (r["tid"], r["k"], bool(r["is_update"]))
-            for r in rows
-            if r["k"] is not None and (exist is None or r["k"] in exist)
-        ]
-        stats, tid_epoch = _sim_schedule(
-            op_rows, cur, reorder=reorder, max_epochs=max_epochs
-        )
-        # Install, driver-side: per key the winner is the NEWEST epoch,
-        # ties to smallest tid then largest seq — identical to the
-        # distributed install window ((_install_epoch DESC, tid ASC,
-        # seq DESC)) and to stream_drain_step's memtable fold. Under
-        # insert_missing a committed NULL-key write mirrors the
-        # distributed window's single NULL group (one winner row).
-        best: dict = {}
-        for r in rows:
-            k = r["k"]
-            if not r["is_update"]:
-                continue
-            if exist is not None and (k is None or k not in exist):
-                continue
-            ep = tid_epoch.get(r["tid"])
-            if ep is None:
-                continue
-            rank = (ep, -r["tid"], r["seq"])
-            if k not in best or rank > best[k][0]:
-                best[k] = (rank, tuple(r[c] for c in new_cols))
-        if not best:
-            return base, stats
-        delta_schema = StructType(
-            [
-                StructField(f.name, f.dataType, True)
-                for f in [kv.schema["k"]] + [kv.schema[c] for c in value_cols]
-            ]
-        )
-        delta = spark.createDataFrame(
-            [(k, *vals) for k, (_, vals) in best.items()], delta_schema
-        )
-        # Delta is batch-bounded: broadcast it so the merge never
-        # shuffles the (100 TB design point) base table.
-        return (
-            base.join(F.broadcast(delta), "k", "left_anti").unionByName(delta),
-            stats,
-        )
+
+def _existing_keys(base: DataFrame, keys: set) -> set:
+    """Which of the (non-NULL, batch-bounded) ``keys`` exist in ``base``:
+    one broadcast join that streams the table and broadcasts the keys."""
+    from pyspark.sql.types import StructField, StructType
+
+    kdf = base.sparkSession.createDataFrame(
+        [(k,) for k in sorted(keys)],
+        StructType([StructField("k", base.schema["k"].dataType)]),
+    )
+    return {r[0] for r in base.select("k").join(F.broadcast(kdf), "k", "inner").collect()}
+
+
+def _existence(base: DataFrame, keys: set, prefetch_bound: int | None) -> tuple[set, bool]:
+    """The prefetch-or-probe existence policy: returns (existing keys,
+    complete). A table whose key count fits ``prefetch_bound`` answers
+    with its WHOLE key set (count + one narrow collect; ``complete`` is
+    True, so the set answers any later key by membership); a larger one
+    answers ``keys`` only, through ``_existing_keys``. ``None`` skips the
+    count for a table already known to be too large."""
+    if prefetch_bound is not None and base.count() <= prefetch_bound:
+        return {r[0] for r in base.select("k").collect()}, True
+    return _existing_keys(base, keys), False
+
+
+def _drain_rows(
+    rows: list,
+    exist: set | None,
+    new_cols: list[str],
+    *,
+    reorder: bool,
+    max_epochs: int,
+) -> tuple[list[dict], dict]:
+    """The driver-side drain of one collected batch. Execute skips ops on
+    keys outside ``exist`` (``None``: insert_missing, every op
+    participates), ``_sim_schedule`` computes the verdicts, and each
+    key's install winner is picked — newest epoch, then smallest tid,
+    then largest seq, the same composite order as the distributed
+    install window ((_install_epoch DESC, tid ASC, seq DESC)). Returns
+    (per-epoch stats, {k: staged values of the winner})."""
+    found = [
+        r for r in rows
+        if exist is None or (r["k"] is not None and r["k"] in exist)
+    ]
+    # Analysis sees only non-NULL-key ops (the distributed loop filters
+    # k.isNotNull() before flags); the Collect bookkeeping seeds from the
+    # RAW batch, so a txn whose every op was skipped still counts
+    # in-flight in epoch 1 and trivially commits (as the serial oracle).
+    stats, tid_epoch = _sim_schedule(
+        [(r["tid"], r["k"], bool(r["is_update"])) for r in found if r["k"] is not None],
+        {r["tid"] for r in rows},
+        reorder=reorder,
+        max_epochs=max_epochs,
+    )
+    # Under insert_missing a committed NULL-key write mirrors the
+    # distributed window's single NULL group (one winner row).
+    best: dict = {}
+    for r in found:
+        ep = tid_epoch.get(r["tid"])
+        if not r["is_update"] or ep is None:
+            continue
+        rank = (ep, -r["tid"], r["seq"])
+        if r["k"] not in best or rank > best[r["k"]][0]:
+            best[r["k"]] = (rank, tuple(r[c] for c in new_cols))
+    return stats, {k: vals for k, (_, vals) in best.items()}
+
+
+def _drain_distributed(
+    kv: DataFrame,
+    ops: DataFrame,
+    *,
+    reorder: bool,
+    insert_missing: bool,
+    max_epochs: int,
+) -> tuple[DataFrame, list[dict]]:
+    """The distributed epoch loop for batches above the driver bound (see
+    run_batch): checkpoint batch and table, probe existence once, run
+    ``_drain_loop`` at batch width, merge the lazy delta over the table."""
+    spark = kv.sparkSession
+    value_cols = [c for c in kv.columns if c != "k"]
     ops0 = ops.localCheckpoint()
     base = kv.localCheckpoint()
-    # Collect-phase bookkeeping seeds from the RAW batch (see fast path).
+    # Collect-phase bookkeeping seeds from the RAW batch (see _drain_rows).
     cur = {r[0] for r in ops0.select("tid").distinct().collect()}
     if not insert_missing:
         # Execute's missing-key probe is epoch-INVARIANT: without
@@ -361,29 +382,13 @@ def run_batch(
         "spark.sql.shuffle.partitions": str(drain_parts),
         "spark.sql.adaptive.enabled": "false",
     }
-    saved_conf = {k: spark.conf.get(k) for k in drain_conf}
-    # ``cur`` (seeded above, pre-probe) is the set of still-aborted
-    # ORIGINAL tids — the driver-side Collect phase (the reference's host
-    # compaction, ref: TransctionManager.cuh:176-184; see _drain_loop for
-    # why no dense re-numbering is needed). Each epoch's ops view is then
-    # ops0 + one survivor filter — never a chain of per-epoch rewrites,
-    # so no per-epoch ops job exists.
-    for k_, v_ in drain_conf.items():
-        spark.conf.set(k_, v_)
-    try:
+    with scoped_conf(spark, drain_conf):
         stats, delta = _drain_loop(
-            ops0,
-            value_cols,
-            cur,
-            reorder=reorder,
-            max_epochs=max_epochs,
+            ops0, value_cols, cur, reorder=reorder, max_epochs=max_epochs
         )
-    finally:
-        for k_, v_ in saved_conf.items():
-            spark.conf.set(k_, v_)
     if delta is None:
         return base, stats
-    return base.join(delta, "k", "left_anti").unionByName(delta), stats
+    return _overlay(base, delta), stats
 
 
 def _sim_schedule(
@@ -393,12 +398,10 @@ def _sim_schedule(
     reorder: bool,
     max_epochs: int,
 ) -> tuple[list[dict], dict]:
-    """The pure-Python drain schedule shared by the batch fast path
-    (``run_batch``'s driver-sim branch) and the streaming per-trigger
-    step (``stream_drain_step``): epoch-by-epoch verdicts over the
-    capacity-bounded (tid, k, is_update) tuples, never touching a
-    DataFrame. Returns (per-epoch stats, committed tid → install
-    epoch)."""
+    """The pure-Python drain schedule of ``_drain_rows``: epoch-by-epoch
+    verdicts over the capacity-bounded (tid, k, is_update) tuples, never
+    touching a DataFrame. Returns (per-epoch stats, committed tid →
+    install epoch)."""
     stats: list[dict] = []
     tid_epoch: dict = {}
     cur = set(cur)
@@ -448,14 +451,8 @@ def _sim_schedule(
 
 
 class StreamDrainState:
-    """Cross-trigger state for the streamed Aria drain (r8, r7 verdict
-    item 1: shrink the sustained-ingest trigger floor).
-
-    The r7 driver re-materialized the ENTIRE carried table once per
-    trigger (``state["kv"] = run_batch(...)`` + entry localCheckpoint) —
-    per-trigger cost ∝ table size, the wrong asymptote for continuous
-    ingest into a 100 TB table. This state is an LSM-memtable shape
-    instead:
+    """Cross-trigger state for the streamed Aria drain, in LSM-memtable
+    shape so per-trigger cost follows the batch, never the table:
 
     - ``base0``: the distributed base table, checkpointed ONCE at stream
       start (re-checkpointed only on flush / oversized-batch fallback);
@@ -463,36 +460,31 @@ class StreamDrainState:
       {k: value tuple}, newest-trigger-wins by plain overwrite. The
       reference caps in-flight transactions at 200
       (TransctionManager.cuh:15), so each trigger contributes a bounded
-      key set and bounded value bytes; ``flush_threshold`` bounds the
-      total, after which the memtable is folded into base0 ONCE (one
-      distributed merge job, amortized over many triggers) — the same
-      memtable/flush discipline every LSM ingest path uses.
+      key set and bounded value bytes; past ``flush_threshold`` keys the
+      memtable is folded into base0 once (one distributed merge,
+      amortized over many triggers).
     - ``known_exist`` / ``known_missing``: the driver-side key-existence
       cache. The streamed drain runs ``insert_missing=False`` (the
       reference's YCSB loop), where committed updates can neither create
       nor drop a key — existence is STATIC for the stream's lifetime.
-      Tables whose key COUNT fits ``key_cache_bound`` prefetch the whole
-      key set on first touch (two jobs, once — afterwards every
-      existence question is a dict hit and NO probe job ever runs
-      again); larger tables probe each never-seen key once via a
-      bounded broadcast join.
+      The first touch applies the drain core's existence policy
+      (``_existence``) with ``key_cache_bound``: a table whose key count
+      fits it caches its whole key set (``all_keys_cached``) and never
+      probes again; a larger table probes each never-seen key once.
 
-    Steady-state per-trigger Spark work: ONE bounded collect of the
-    micro-batch (ops + staged values — legal to hold driver-side
-    precisely because batches are capacity-bounded); the schedule AND
-    the install-winner resolution run in Python on that collect. The
-    r7-era path paid ~7 jobs/trigger (isEmpty, ops checkpoint, tid
-    collect, probe checkpoint, count, sim collect, full-table
-    checkpoint) ≈ 0.9 s of repo overhead per trigger on this box.
-    ``table()`` materializes base0 ⟕ memtable lazily — evaluated by the
-    caller at stream end, not per trigger."""
+    Each trigger runs the driver core shared with ``run_batch`` (see
+    ``stream_drain_step``). ``table()`` is base0 ⟕ memtable, lazy —
+    evaluated by the caller at stream end, not per trigger. The counters
+    ``probe_jobs`` (broadcast existence probes), ``flush_jobs`` and
+    ``flush_secs`` (memtable folds and their wall seconds) let a
+    benchmark prove which path it measured."""
 
     def __init__(
         self,
         kv: DataFrame,
         *,
         flush_threshold: int = 500_000,
-        key_cache_bound: int = 1_000_000,
+        key_cache_bound: int = _KEY_PREFETCH_BOUND,
         max_known: int = 10_000_000,
     ) -> None:
         self.base0 = kv.localCheckpoint()
@@ -503,39 +495,16 @@ class StreamDrainState:
         self.flush_threshold = flush_threshold
         self.key_cache_bound = key_cache_bound
         self.max_known = max_known
-        self._k_type = self.base0.schema["k"].dataType
         self._probed_count = False
         self.value_cols = [c for c in self.base0.columns if c != "k"]
-        # Introspection (r9, r8 verdict item 5): how many broadcast
-        # existence-probe jobs actually ran — the large-key-universe
-        # bench records this to prove the probe path, not the all-keys
-        # prefetch, is the measured one.
         self.probe_jobs = 0
         self.flush_jobs = 0
-        # Cumulative wall seconds spent inside flush()'s distributed
-        # fold — the bench's flush-path probe (r9 verdict item 5)
-        # reports this as the flush share of the trigger walls.
         self.flush_secs = 0.0
-
-    def _delta_df(self) -> DataFrame:
-        spark = self.base0.sparkSession
-        cols = self.base0.columns
-        vidx = {c: i for i, c in enumerate(self.value_cols)}
-        rows = [
-            tuple(k if c == "k" else vals[vidx[c]] for c in cols)
-            for k, vals in self.delta_mem.items()
-        ]
-        return spark.createDataFrame(rows, self.base0.schema)
 
     def table(self) -> DataFrame:
         """The current logical table: base0 overridden by the memtable
         (lazy — one anti-join + union when evaluated)."""
-        if not self.delta_mem:
-            return self.base0
-        delta = self._delta_df()
-        return self.base0.join(
-            F.broadcast(delta), "k", "left_anti"
-        ).unionByName(delta)
+        return _overlay(self.base0, self.delta_mem)
 
     def flush(self) -> None:
         """Fold the memtable into base0 (one distributed merge +
@@ -551,52 +520,32 @@ class StreamDrainState:
 
     def _resolve_existence(self, keys: set) -> None:
         """Answer key existence for this batch with at most one job —
-        usually zero. First touch on a small table prefetches ALL keys;
-        otherwise never-seen keys probe base0 once via a bounded
-        broadcast join."""
+        usually zero. The first touch runs the prefetch-or-probe policy;
+        afterwards only never-seen keys probe base0."""
         unknown = (
             {k for k in keys if k is not None} - self.known_exist - self.known_missing
         )
-        if not unknown:
+        # With all keys cached, known_exist IS the complete key set
+        # (static), so membership answers every probe; recording misses
+        # would only grow known_missing without bound.
+        if not unknown or self.all_keys_cached:
             return
-        if self.all_keys_cached:
-            # known_exist IS the complete key set (insert_missing=False ⇒
-            # static), so membership alone answers every probe; recording
-            # the misses would only grow known_missing without bound over
-            # a long-lived stream probing ever-fresh absent keys.
+        bound = None if self._probed_count else self.key_cache_bound
+        self._probed_count = True
+        found, complete = _existence(self.base0, unknown, bound)
+        if complete:
+            self.known_exist = found
+            self.all_keys_cached = True
+            self.known_missing.clear()
             return
-        if not self._probed_count:
-            self._probed_count = True
-            if self.base0.count() <= self.key_cache_bound:
-                self.known_exist = {r[0] for r in self.base0.select("k").collect()}
-                self.all_keys_cached = True
-                # known_missing stays EMPTY on this path forever: the
-                # complete key set answers every probe by membership, so
-                # recording misses would only leak driver memory.
-                self.known_missing.clear()
-                return
-        from pyspark.sql.types import StructField, StructType
-
-        spark = self.base0.sparkSession
-        unk_df = spark.createDataFrame(
-            [(k,) for k in sorted(unknown)],
-            StructType([StructField("k", self._k_type)]),
-        )
         self.probe_jobs += 1
-        found = {
-            r[0]
-            for r in self.base0.select("k")
-            .join(F.broadcast(unk_df), "k", "inner")
-            .collect()
-        }
         if len(self.known_exist) + len(self.known_missing) + len(unknown) > self.max_known:
             # Evict ONLY keys outside the current batch: the caller is
             # about to answer this batch's existence questions from the
             # cache, so wholesale clear() would silently drop committed
-            # updates to previously-cached keys (r8 verdict wrong-answer:
-            # final A1 vs run_batch oracle A2 once max_known tripped).
-            # Batch key sets are capacity-bounded (driver_sim_threshold),
-            # so the retained core stays bounded too.
+            # updates to previously-cached keys. Batch key sets are
+            # capacity-bounded (driver_sim_threshold), so the retained
+            # core stays bounded too.
             self.known_exist &= keys
             self.known_missing &= keys
         self.known_exist |= found
@@ -612,79 +561,37 @@ def stream_drain_step(
     driver_sim_threshold: int = 100_000,
 ) -> list[dict]:
     """One micro-batch of the streamed Aria drain against the carried
-    ``StreamDrainState`` (see that class for the per-trigger cost
-    contract). Returns the batch's per-epoch stats — [] for an empty
-    batch. Semantics are exactly ``run_batch(state.table(), ops,
-    reorder=...)``: the same ``_sim_schedule`` computes the verdicts,
-    the same composite window picks each key's install winner, and the
-    cross-trigger newest-wins delta merge is associative with the
-    per-trigger full-table merge it replaces (pinned by
-    tests/test_streaming.py and tests/test_r8_stream_fastpath.py).
-    Batches above ``driver_sim_threshold`` op rows flush the memtable
-    and fall back to the distributed ``run_batch`` loop on the
-    materialized table (the key-existence cache stays valid: the key
-    set is static under insert_missing=False)."""
-    # ONE job per trigger, total: emptiness, the fast-path size check,
-    # the sim's op tuples, the Collect phase's pre-probe tid universe,
-    # AND the staged write values all come from this single bounded
-    # collect (capacity-bounded by the reference's own batch contract,
-    # TransctionManager.cuh:15 — the reason the values may legally ride
-    # to the driver). Nothing lazy survives the trigger that references
-    # the expiring streaming source.
-    value_cols = state.value_cols
-    new_cols = [f"new_{c}" for c in value_cols]
-    rows = (
-        ops.select("tid", "seq", "k", "is_update", *new_cols)
-        .limit(driver_sim_threshold + 1)
-        .collect()
-    )
+    ``StreamDrainState``. Returns the batch's per-epoch stats — [] for an
+    empty batch. Semantics are exactly ``run_batch(state.table(), ops,
+    reorder=...)``, through the same driver core: one bounded collect
+    (``_collect_batch`` — emptiness, the size check, the schedule tuples
+    and the staged values all come from this one job, and nothing lazy
+    survives the trigger that references the expiring streaming source),
+    the cached existence policy (``_resolve_existence``, usually zero
+    jobs), then ``_drain_rows``, whose winners overwrite the memtable —
+    the cross-trigger newest-wins merge. A warm trigger therefore runs
+    one Spark job. Batches above ``driver_sim_threshold`` op rows flush
+    the memtable and take ``_drain_distributed`` on base0 (the
+    key-existence cache stays valid: the key set is static under
+    insert_missing=False). Pinned by tests/test_streaming.py and
+    tests/test_r8_stream_fastpath.py."""
+    new_cols = [f"new_{c}" for c in state.value_cols]
+    rows = _collect_batch(ops, new_cols, driver_sim_threshold)
     if not rows:
         return []
     if len(rows) > driver_sim_threshold:
         state.flush()
-        new_kv, stats = run_batch(
-            state.base0,
-            ops.localCheckpoint(),
-            reorder=reorder,
-            max_epochs=max_epochs,
-            driver_sim_threshold=driver_sim_threshold,
+        new_kv, stats = _drain_distributed(
+            state.base0, ops, reorder=reorder, insert_missing=False, max_epochs=max_epochs
         )
         state.base0 = new_kv.localCheckpoint()
         return stats
+    # Memtable keys ⊆ base0 keys, so base0 existence IS table existence.
     state._resolve_existence({r["k"] for r in rows})
-    cur = {r["tid"] for r in rows}
-    # Execute's missing-key skip, driver-side: ops on keys absent from
-    # base0 never reach analysis (same as run_batch's distributed probe;
-    # memtable keys ⊆ base0 keys, so base0 existence IS table existence).
-    op_rows = [
-        (r["tid"], r["k"], bool(r["is_update"]))
-        for r in rows
-        if r["k"] is not None and r["k"] in state.known_exist
-    ]
-    stats, tid_epoch = _sim_schedule(
-        op_rows, cur, reorder=reorder, max_epochs=max_epochs
+    stats, winners = _drain_rows(
+        rows, state.known_exist, new_cols, reorder=reorder, max_epochs=max_epochs
     )
-    if not tid_epoch:
-        return stats
-    # Install, fully driver-side: per key the winner is the NEWEST epoch,
-    # ties to smallest tid then largest seq — the same composite order
-    # the distributed install window uses ((_install_epoch DESC, tid
-    # ASC, seq DESC), same as run_batch); committed writes to MISSING keys
-    # are no-ops (ref: TrancM_func.cuh:32-34). Overwriting the memtable
-    # entry IS the cross-trigger newest-wins merge.
-    best: dict = {}
-    for r in rows:
-        k = r["k"]
-        if not r["is_update"] or k is None or k not in state.known_exist:
-            continue
-        ep = tid_epoch.get(r["tid"])
-        if ep is None:
-            continue
-        rank = (ep, -r["tid"], r["seq"])
-        if k not in best or rank > best[k][0]:
-            best[k] = (rank, tuple(r[c] for c in new_cols))
-    for k, (_, vals) in best.items():
-        state.delta_mem[k] = vals
+    state.delta_mem.update(winners)
     if len(state.delta_mem) > state.flush_threshold:
         state.flush()
     return stats
@@ -725,13 +632,8 @@ def _drain_loop(
         # TransctionManager.cuh:15), collected to the driver. ops_e is
         # pre-probed (or insert-on-miss), so no per-epoch table probe.
         flags = _flags_from_found(ops_e.filter(F.col("k").isNotNull()))
-        abort_cond = (
-            (F.col("waw") | (F.col("raw") & F.col("war")))
-            if reorder
-            else (F.col("waw") | F.col("raw"))
-        )
         verd = {r["tid"]: not r["abort"] for r in
-                flags.withColumn("abort", abort_cond).select("tid", "abort").collect()}
+                flags.select("tid", _abort_cond(reorder).alias("abort")).collect()}
         aborted_tids = sorted(tid for tid, committed in verd.items() if not committed)
         committed_tids = [t for t, c in verd.items() if c]
         n_aborted = len(aborted_tids)
@@ -745,12 +647,7 @@ def _drain_loop(
         # with insert-on-miss, legitimately creates one) — no per-epoch
         # key-existence join.
         writes = ops_e.filter(F.col("is_update") & F.col("tid").isin(committed_tids))
-        w = W.partitionBy("k").orderBy(F.col("tid").asc(), F.col("seq").desc())
-        last_writes = (
-            writes.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("k", *[F.col(f"new_{c}").alias(c) for c in value_cols])
-        )
+        last_writes = _last_writes(writes, value_cols)
         # Delta bookkeeping: APPEND-only. The obvious formulation — fold
         # each epoch's writes into a running anti-join+union delta — makes
         # the lazy plan one level deeper per epoch, and since PySpark

@@ -36,6 +36,24 @@ def _ops_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _md5_base_and_ops(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The install-checking pair: a 500-key base table with portable
+    md5-derived values (``substr(md5('base_' || k), 1, 10)``) and the
+    events-derived batch staging ``substr(md5('w|tid|seq|k'), 1, 10)``
+    per op, so the engine and the DuckDB oracle compute identical bytes."""
+    base = spark.range(1, 501).select(
+        F.col("id").alias("k"),
+        F.substring(
+            F.md5(F.concat(F.lit("base_"), F.col("id").cast("string"))), 1, 10
+        ).alias("v"),
+    )
+    stage = F.concat_ws("|", F.lit("w"), *[F.col(c).cast("string") for c in ("tid", "seq", "k")])
+    ops = _ops_from_events(spark, sf_dir).withColumn(
+        "new_v", F.substring(F.md5(stage), 1, 10)
+    )
+    return base, ops
+
+
 @register(
     "aria_commit_flags",
     oracle="""
@@ -293,26 +311,7 @@ def aria_install_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/database/ycsb/TrancM_func.cuh:188-198)."""
     from bishe_gpu_database_spark.aria.engine import aria_epoch
 
-    base = spark.range(1, 501).select(
-        F.col("id").alias("k"),
-        F.substring(F.md5(F.concat(F.lit("base_"), F.col("id").cast("string"))), 1, 10).alias("v"),
-    )
-    ops = _ops_from_events(spark, sf_dir).withColumn(
-        "new_v",
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit("w"),
-                    F.col("tid").cast("string"),
-                    F.col("seq").cast("string"),
-                    F.col("k").cast("string"),
-                )
-            ),
-            1,
-            10,
-        ),
-    )
+    base, ops = _md5_base_and_ops(spark, sf_dir)
     return aria_epoch(base, ops, reorder=True).kv
 
 
@@ -356,28 +355,7 @@ def aria_drain_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     covered rows-only by aria_drain_batch; the final STATE is exact and
     this query gates it — upgrading the drain from rows-only to
     hash-checked (VERDICT r2 item 7)."""
-    base = spark.range(1, 501).select(
-        F.col("id").alias("k"),
-        F.substring(
-            F.md5(F.concat(F.lit("base_"), F.col("id").cast("string"))), 1, 10
-        ).alias("v"),
-    )
-    ops = _ops_from_events(spark, sf_dir).withColumn(
-        "new_v",
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit("w"),
-                    F.col("tid").cast("string"),
-                    F.col("seq").cast("string"),
-                    F.col("k").cast("string"),
-                )
-            ),
-            1,
-            10,
-        ),
-    )
+    base, ops = _md5_base_and_ops(spark, sf_dir)
     final_kv, _stats = run_batch(base, ops, reorder=True)
     return final_kv
 
@@ -432,28 +410,7 @@ def aria_stream_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch drain (``aria_drain_final_state``)."""
     from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
 
-    base = spark.range(1, 501).select(
-        F.col("id").alias("k"),
-        F.substring(
-            F.md5(F.concat(F.lit("base_"), F.col("id").cast("string"))), 1, 10
-        ).alias("v"),
-    )
-    ops = _ops_from_events(spark, sf_dir).withColumn(
-        "new_v",
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit("w"),
-                    F.col("tid").cast("string"),
-                    F.col("seq").cast("string"),
-                    F.col("k").cast("string"),
-                )
-            ),
-            1,
-            10,
-        ),
-    )
+    base, ops = _md5_base_and_ops(spark, sf_dir)
     state = StreamDrainState(base)
     for b in range(3):
         stream_drain_step(
@@ -482,28 +439,7 @@ def aria_stream_bounded_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/cuda/TrancM_func.cuh:188-198."""
     from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
 
-    base = spark.range(1, 501).select(
-        F.col("id").alias("k"),
-        F.substring(
-            F.md5(F.concat(F.lit("base_"), F.col("id").cast("string"))), 1, 10
-        ).alias("v"),
-    )
-    ops = _ops_from_events(spark, sf_dir).withColumn(
-        "new_v",
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit("w"),
-                    F.col("tid").cast("string"),
-                    F.col("seq").cast("string"),
-                    F.col("k").cast("string"),
-                )
-            ),
-            1,
-            10,
-        ),
-    )
+    base, ops = _md5_base_and_ops(spark, sf_dir)
     state = StreamDrainState(
         base, key_cache_bound=0, max_known=0, flush_threshold=25
     )

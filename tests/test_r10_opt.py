@@ -8,6 +8,9 @@ an optimization changes an operator's internals).
   (full-key prefetch under ``_KEY_PREFETCH_BOUND`` vs bounded broadcast
   probe above it) must produce identical drains — the same table, the
   same schedule.
+- The shared drain core's Spark job budget: the fast path and a warm
+  streamed step, counted by job group; and the distributed path leaves
+  the session conf as it found it.
 """
 
 from __future__ import annotations
@@ -15,7 +18,11 @@ from __future__ import annotations
 import pytest
 
 from bishe_gpu_database_spark.aria import engine
-from bishe_gpu_database_spark.aria.engine import run_batch
+from bishe_gpu_database_spark.aria.engine import (
+    StreamDrainState,
+    run_batch,
+    stream_drain_step,
+)
 from bishe_gpu_database_spark.aria.workload import gen_kv, gen_ops
 
 
@@ -100,3 +107,68 @@ def test_fastpath_empty_ops(spark):
     out, stats = run_batch(kv, ops, reorder=True)
     assert stats == []
     assert _rows(out) == _rows(kv)
+
+
+def _job_count(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return how many Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_drain_core_job_counts(spark, monkeypatch):
+    """The drain core's job budget on the reference-shaped batch (2,000
+    keys, 150 txns, 4 ops partitions on local[4]): the fast path pays the
+    one bounded collect plus the existence policy (count + key collect
+    on the prefetch branch, count + broadcast probe on the probe branch),
+    and a warm streamed step with every key cached pays the collect
+    alone — one job, because the collect scans all partitions in one
+    pass."""
+    kv = gen_kv(spark, n_keys=2000)
+    ops = gen_ops(spark, n_txns=150, max_ops=30, n_keys=2000, write_pct=40)
+    assert _job_count(spark, "jc-prefetch", lambda: run_batch(kv, ops)) <= 4
+    with monkeypatch.context() as m:
+        m.setattr(engine, "_KEY_PREFETCH_BOUND", 0)
+        assert _job_count(spark, "jc-probe", lambda: run_batch(kv, ops)) <= 5
+    state = StreamDrainState(kv)
+    stream_drain_step(state, ops)
+    assert state.all_keys_cached
+    assert _job_count(spark, "jc-warm", lambda: stream_drain_step(state, ops)) == 1
+
+
+_DRAIN_CONF_KEYS = (
+    "spark.sql.limit.initialNumPartitions",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled",
+)
+
+
+@pytest.mark.parametrize("unset_first", [False, True])
+def test_distributed_drain_restores_session_conf(spark, unset_first):
+    """The distributed path scopes three session confs around its collect
+    and epoch loop; afterwards each reads exactly as before — including
+    a key that was unset before, which must come back unset rather than
+    pinned to the value the drain saw."""
+    kv = gen_kv(spark, n_keys=200)
+    ops = gen_ops(spark, n_txns=20, max_ops=6, n_keys=200, seed="r10conf")
+    session = {k: spark.conf.get(k, None) for k in _DRAIN_CONF_KEYS}
+    try:
+        if unset_first:
+            for k in _DRAIN_CONF_KEYS:
+                spark.conf.unset(k)
+        before = {k: spark.conf.get(k, None) for k in _DRAIN_CONF_KEYS}
+        out, stats = run_batch(kv, ops, driver_sim_threshold=0)
+        assert stats
+        assert {k: spark.conf.get(k, None) for k in _DRAIN_CONF_KEYS} == before
+        out.count()
+    finally:
+        for k, v in session.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1,4 +1,4 @@
-"""r7: the driver-sim drain fast path (engine.py:_drain_sim) must be
+"""r7: the driver-sim drain fast path (engine.py:_drain_rows) must be
 bit-identical to the distributed epoch loop — same schedule (per-epoch
 verdicts on original tids), same stats, same final table — across both
 install policies, insert-on-miss, contention levels, and a batch whose
