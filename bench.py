@@ -1,12 +1,13 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Headline timer: runs the HEADLINE queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}.
 
 Headline set = one representative per operator family (scan/agg, join
 tree, window, set-based Aria epoch, dedup/LSH, similarity, text) so the
-number tracks the engine's breadth, not one hot loop. Each query is
-collected to the driver (row counts only) to force full execution.
+number tracks the engine's breadth, not one hot loop. ``perfbench/``
+imports the same list; the benchmark proper (seeded fixture, output
+checks, per-layer metrics, the Aria drain paths) is ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -36,182 +37,50 @@ HEADLINE = [
     "stream_session_window",
     "rollup_time_hierarchy",
     "graph_pagerank_3iter",
-    # r3 breadth additions (VERDICT r2 item 8): the newest op families —
-    # recursive CTE, CDC merge, the composed corpus build, irregular
-    # timeseries, and the drain's hash-gated final state — so the
-    # headline keeps tracking the registered surface as it grows.
+    # Recursive CTE, CDC merge, the composed corpus build, irregular
+    # timeseries, attribution and the table checksum.
     "graph_reachability_rcte",
     "cdc_merge_snapshot",
     "pipeline_e2e_corpus",
     "timeseries_twap",
     "events_attribution_u_shaped",
     "quality_table_checksum",
-    # r3 new families: spatial grid join, character-level fuzzy join,
-    # exact-integer change-point detection.
+    # Spatial grid join, character-level fuzzy join, change-point detection.
     "geo_neighbor_pairs",
     "dedup_editdist_fastss",
     "timeseries_cusum_changepoint",
-    # late-r3 families: probabilistic record linkage and cluster-scoped
-    # semantic dedup over the embedding table.
+    # Probabilistic record linkage and cluster-scoped semantic dedup.
     "linkage_fellegi_sunter",
     "dedup_semdedup",
-    # r4 family: the zero-window partition-offset global rank (three
-    # independent rank axes + exact ntile re-derivation in one query).
+    # The zero-window partition-offset global rank.
     "mart_rfm_segments",
 ]
 
-
-# r11 (r10 verdict item 7): one headline-scale data point ABOVE the
-# latency-bound sf0.1 fixture. The whole 28-query portfolio at sf0.1 is
-# job-scheduling-bound (BENCH_r10_c8: 8 cores beat 32), so core-count
-# scaling is invisible to the headline numbers; this block times a small
-# set of genuinely heavy queries once per measure pass on the synthetic
-# sf1 (10x key-shifted replicas, scripts/scale_probe_sf1.synthesize —
-# raw-data re-layout like the relayout ingest, no query results cached).
-# Additions-only: the driver contract's `queries` dict is untouched; the
-# compact line gains one `sf1_sum_sec` field. Disable with
-# SPARK_GRAFT_SF1_BLOCK=0.
-SF1_PROBES = [
-    "q1_pricing_summary",        # scan + partial agg
-    "join_sortmerge_large",      # fact-fact shuffle join
-    "dedup_minhash_lsh_pairs",   # map-side signatures + band self-join
-    "graph_pagerank_3iter",      # iterative broadcast-join loop
-    "mart_rfm_segments",         # one-scan multi-axis rank
-]
+# Single runs on a shared box carry multi-second steal/GC noise; the
+# minimum of 7 is the query's cost.
+REPS = 7
 
 
-def _sf1_block(spark, sf_dir: str) -> dict:
-    """Synthesize (once per box) and time the SF1_PROBES at sf1, 2 reps,
-    min kept. Never fails the bench — returns {} on any error."""
-    import time as _t
-
-    if os.environ.get("SPARK_GRAFT_SF1_BLOCK", "1") == "0":
-        return {}
-    if os.path.basename(sf_dir.rstrip("/")) != "sf0.1":
-        return {}  # the synthesizer replicates the sf0.1 fixture only
-    try:
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "scale_probe_sf1",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "scripts", "scale_probe_sf1.py"),
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        mod.synthesize(spark)
-        out: dict = {}
-        for name in SF1_PROBES:
-            best = float("inf")
-            for _ in range(2):
-                t0 = _t.perf_counter()
-                REGISTRY[name].fn(spark, mod.SF1).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, _t.perf_counter() - t0)
-            out[name] = round(best, 3)
-            print(f"# sf1 {name}: {best:.3f}s", file=sys.stderr, flush=True)
-        return {"dir": mod.SF1, "queries": out,
-                "sum_sec": round(sum(out.values()), 3)}
-    except Exception as e:  # the sf1 block must never fail the bench line
-        print(f"# sf1 block failed: {e}", file=sys.stderr, flush=True)
-        return {}
-
-
-# The repo's own clean-session bar (see README noise discipline): the
-# probe query timed at bench start/middle/end should agree within ~60%.
-# BENCH_r07.json shipped with spread 2.631 — a dirty box — and every
-# apparent regression in it was contradicted by the quiet-session bench,
-# so the official artifact must defend itself (r7 verdict item 2).
-NOISE_CLEAN_BAR = 0.6
-
-
-def run_with_noise_defense(
-    measure,
-    *,
-    bar: float = NOISE_CLEAN_BAR,
-    retries: int = 2,
-    cooldown_sec: float = 150.0,
-    sleep=time.sleep,
-    log=lambda msg: print(msg, file=sys.stderr, flush=True),
-) -> dict:
-    """Run ``measure()`` until its payload's noise_spread clears ``bar``
-    or retries are exhausted; keep and stamp the BEST (lowest-spread)
-    attempt.
-
-    A dirty session (hypervisor steal, a just-exited JVM's page-cache
-    churn) inflates the probe spread; cooling down and re-measuring in
-    the same warmed session usually recovers a clean read. The stamp
-    makes the artifact self-describing either way: ``noise_clean: false``
-    tells the grader the payload's absolute numbers are unattributable
-    BEFORE cross-round comparison, instead of after (the r7 failure
-    mode). r10 (r9 verdict item 1): the kept payload is the attempt with
-    the LOWEST spread, not the last one — BENCH_r09 shipped attempt 3's
-    1.427 spread when attempt 2 had measured 0.659; when no attempt
-    clears the bar, the least-noisy measurement is still the most
-    trustworthy one taken. Unit-tested without Spark via the injected
-    measure/sleep."""
-    attempts: list[float] = []
-    best: dict = {}
-    for attempt in range(1 + retries):
-        if attempt:
-            log(f"# noise_spread {attempts[-1]} > {bar}: cooling down "
-                f"{cooldown_sec:.0f}s and re-measuring (attempt {attempt + 1})")
-            sleep(cooldown_sec)
-        payload = measure()
-        attempts.append(payload["noise_spread"])
-        if not best or payload["noise_spread"] < best["noise_spread"]:
-            best = payload
-        if payload["noise_spread"] <= bar:
-            break
-    best["noise_clean"] = best["noise_spread"] <= bar
-    best["noise_clean_bar"] = bar
-    best["noise_attempts"] = attempts
-    return best
-
-
-def compact_payload(payload: dict, detail_path: str) -> dict:
-    """The driver-facing SUMMARY of a full bench payload (r9 verdict
-    item 1): the driver's BENCH_r{N}.json keeps only the last 2000
-    chars of stdout, and r8/r9 shipped `parsed: null` because the full
-    payload line (per-query p50s, anchor ratios, nested aria probes)
-    blew that budget. This compact dict keeps the driver contract
-    (metric/value/unit/queries/sf) plus the headline signals a grader
-    needs (noise verdict, anchor, portfolio sum, aria txn/s) and points
-    at the lossless artifact for everything else. Size is asserted by
-    tests/test_bench_noise.py::test_compact_line_fits_driver_tail."""
-    aria = payload.get("aria") or {}
-    txn = {}
-    if "txn_per_sec" in aria:
-        txn["drain150"] = aria["txn_per_sec"]
-    for key, tag in (
-        ("batch200", "batch200"),
-        ("batch200_contended", "contended"),
-        ("stream_multibatch", "multibatch"),
-        ("stream_sustained", "sustained"),
-        ("stream_probe_path", "probe_path"),
-        ("stream_flush_path", "flush_path"),
-    ):
-        v = (aria.get(key) or {}).get("txn_per_sec")
-        if v is not None:
-            txn[tag] = v
-    queries_p50 = payload.get("queries_p50") or {}
-    return {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "queries": payload["queries"],
-        "sf": payload["sf"],
-        "noise_clean": payload.get("noise_clean"),
-        "noise_spread": payload.get("noise_spread"),
-        "noise_attempts": payload.get("noise_attempts"),
-        "anchor_p50_sec": (payload.get("anchor") or {}).get("p50_sec"),
-        "portfolio_p50_sum_sec": round(sum(queries_p50.values()), 3),
-        "aria_txn_per_sec": txn,
-        "sf1_sum_sec": (payload.get("sf1_probe") or {}).get("sum_sec"),
-        "n_registered_queries": payload.get("n_registered_queries"),
-        "detail": detail_path,
+def driver_line(per_query: dict[str, float], sf_dir: str) -> str:
+    """The one stdout line the driver parses: the five contract keys,
+    compact separators (the driver keeps the last 2,000 chars)."""
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    payload = {
+        "metric": "headline_query_wall_seconds",
+        "value": round(sum(per_query.values()), 3),
+        "unit": "sec",
+        "queries": per_query,
+        "sf": float(sf) if sf else None,
     }
+    return json.dumps(payload, separators=(",", ":"))
+
+
+def _run_noop(spark, name: str, sf_dir: str) -> float:
+    """One run of ``name`` to the noop sink — full evaluation of every
+    output column, where count() would let Catalyst prune projections."""
+    t0 = time.perf_counter()
+    REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -219,12 +88,6 @@ def main() -> None:
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     _ensure_loaded()
     spark = get_spark("bench")
-    # Steady-state methodology: run every headline query once at the tiny
-    # scale factor first. This warms the JVM, the whole-stage-codegen
-    # cache (same generated code, different input paths), and the Python
-    # UDF worker pool — so the measured numbers reflect query execution,
-    # not first-touch JIT. Cold-start cost is a property of the session,
-    # not of any query; a real deployment pays it once per executor.
     spark.range(1).count()
     # One-time ingest: re-layout the fact tables at the measured SF so
     # scans parallelize (engine-managed storage; paid once, like any load).
@@ -235,396 +98,23 @@ def main() -> None:
             t(spark, sf_dir, tbl).count()
         except Exception as e:
             print(f"# ingest {tbl} failed: {e}", file=sys.stderr, flush=True)
+    # Warm-up at the tiny scale: JVM, whole-stage codegen cache and the
+    # Python UDF workers, so the timed runs measure query execution.
     for name in HEADLINE:
         try:
-            REGISTRY[name].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as e:  # warmup must never fail the bench
+            _run_noop(spark, name, warm_dir)
+        except Exception as e:  # warm-up must never fail the bench
             print(f"# warmup {name} failed: {e}", file=sys.stderr, flush=True)
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = REGISTRY[name].fn(spark, sf_dir)
-        # noop sink: full evaluation of every output column — count()
-        # would let Catalyst prune map-only projections entirely.
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    probe_name = "q1_pricing_summary"
-
-    def measure() -> dict:
-        """One full measured pass (noise probes + headline + Aria
-        axis) in the already-warmed session; repeated by the noise
-        defense when the probe spread marks the session dirty."""
-        # Noise gauge (r3 verdict item 3): the same fixed probe query timed at
-        # bench start / middle / end. If the box is quiet the three minima
-        # agree; a large spread means the environment moved mid-bench and
-        # round-over-round deltas on sub-second queries are not attributable
-        # to code. Probe = q1 (scan+agg, no join skew, sub-second).
-        probes: list[float] = []
-
-        def probe() -> None:
-            probes.append(round(min(run_once(probe_name) for _ in range(3)), 3))
-
-        probe()
-        per_query: dict[str, float] = {}
-        per_query_p50: dict[str, float] = {}
-        total = 0.0
-        for qi, name in enumerate(HEADLINE):
-            if qi == len(HEADLINE) // 2:
-                probe()
-            # Best of 7: single-run numbers on a shared box carry multi-second
-            # hypervisor-steal/GC noise (observed spread 0.85s-5.3s for the
-            # same sub-second query); the minimum is the query's actual cost,
-            # and the median (p50) is reported alongside so a min that got
-            # lucky is visible too.
-            times = sorted(run_once(name) for _ in range(7))
-            per_query[name] = round(times[0], 3)
-            per_query_p50[name] = round(times[len(times) // 2], 3)
-            total += times[0]
-            print(
-                f"# {name}: min {times[0]:.3f}s p50 {times[len(times) // 2]:.3f}s",
-                file=sys.stderr,
-                flush=True,
-            )
-        probe()
-
-        # The reference's OWN headline measurement (epoch-loop wall time over
-        # 150 txns, ≤30 ops, 40% writes, drained to empty — BASELINE.md row 2),
-        # reported as a separate metric so the headline sum stays comparable
-        # across rounds.
-        aria = {}
-        try:
-            fn = REGISTRY["aria_drain_batch"].fn
-            # The drain workload is generated (fixture-independent), so one
-            # untimed pass warms the epoch-loop codegen exactly like the
-            # headline warmups do — the timed runs then measure steady state.
-            fn(spark, warm_dir).collect()
-            best, epochs = float("inf"), 0
-            for _ in range(3):
-                t0 = time.perf_counter()
-                rows = fn(spark, sf_dir).collect()
-                dt = time.perf_counter() - t0
-                if dt < best:
-                    best, epochs = dt, len(rows)
-            aria = {
-                "drain_150txn_sec": round(best, 3),
-                "txn_per_sec": round(150 / best, 1),
-                "epochs": epochs,
-            }
-            print(f"# aria_drain_batch: {best:.3f}s ({epochs} epochs)", file=sys.stderr)
-            # BASELINE.md row 1: bulk load of 199,999 generated KVs into the
-            # keyed table (the reference's host-insert loop + GPU rehashes,
-            # src/main.cu:34-38). Spark analogue: generate, hash-place by key
-            # (the hashKey shuffle), materialize.
-            from bishe_gpu_database_spark.aria.workload import gen_kv
-
-            n_parts = spark.sparkContext.defaultParallelism
-            gen_kv(spark, 199_999).repartition(n_parts, "k").localCheckpoint().count()  # warm
-            t0 = time.perf_counter()
-            n_loaded = (
-                gen_kv(spark, 199_999, seed="bench_load")
-                .repartition(n_parts, "k")
-                .localCheckpoint()
-                .count()
-            )
-            load_s = time.perf_counter() - t0
-            aria["bulk_load_200k_sec"] = round(load_s, 3)
-            aria["load_rows_per_sec"] = round(n_loaded / load_s)
-            print(f"# bulk_load_200k: {load_s:.3f}s ({n_loaded} rows)", file=sys.stderr)
-
-            # r4 verdict item 9: epoch cost ∝ batch, not table. (a) a FULL
-            # 200-txn batch — the reference's batch-capacity bound
-            # (TransctionManager.cuh:15) — must clear at least the 150-txn
-            # throughput; (b) a 3×200-txn STREAMED drain through the
-            # foreachBatch driver (one batch per trigger, state carried
-            # across micro-batches) — the reference's continuous-ingest loop.
-            from bishe_gpu_database_spark.aria.engine import run_batch
-            from bishe_gpu_database_spark.aria.workload import gen_ops
-
-            # (a1) iso-CONTENTION: pairwise conflict density ∝ txns²/keys, so
-            # the key space scales QUADRATICALLY with the batch
-            # (2000·(200/150)² ≈ 3556) to hold the epoch count at the 150-txn
-            # level — there, txn/s must clear the 150-txn figure, showing
-            # throughput ∝ batch at fixed contention (measured: 9 epochs,
-            # 64.6 txn/s vs 48.6). (a2) same-KEYS: contention grows with the
-            # batch (more epochs); the invariant there is per-EPOCH cost flat.
-            for tag, nk in (("batch200", 3556), ("batch200_contended", 2000)):
-                kv_cap = gen_kv(spark, n_keys=nk)
-                ops200 = gen_ops(
-                    spark, n_txns=200, max_ops=30, n_keys=nk, write_pct=40,
-                    seed="bench_cap",
-                )
-                run_batch(kv_cap, ops200, reorder=True)  # warm
-                best200, ep200 = float("inf"), 0
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    _, st = run_batch(kv_cap, ops200, reorder=True)
-                    dt = time.perf_counter() - t0
-                    if dt < best200:
-                        best200, ep200 = dt, len(st)
-                aria[tag] = {
-                    "drain_200txn_sec": round(best200, 3),
-                    "epochs": ep200,
-                    "txn_per_sec": round(200 / best200, 1),
-                    "sec_per_epoch": round(best200 / max(1, ep200), 3),
-                }
-                print(f"# aria_{tag}: {best200:.3f}s ({ep200} epochs)", file=sys.stderr)
-
-            import shutil
-            import tempfile
-
-            from bishe_gpu_database_spark.streaming.streams import aria_foreach_batch
-
-            d = tempfile.mkdtemp(prefix="aria_bench_ops_")
-            try:
-                # 2 batches at the 150-txn/2000-key baseline shape — the
-                # continuous-ingest evidence (state carried across triggers)
-                # without re-paying the contended-200 drain twice.
-                for i in range(2):
-                    gen_ops(
-                        spark, n_txns=150, max_ops=30, n_keys=2000, write_pct=40,
-                        seed=f"bench_mb{i}",
-                    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/b{i}")
-                ops_schema = ops200.schema
-                ops_stream = (
-                    spark.readStream.schema(ops_schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(f"{d}/*")
-                )
-                t0 = time.perf_counter()
-                final, mb_log = aria_foreach_batch(spark, kv_cap, ops_stream, reorder=True)
-                ingest_s = time.perf_counter() - t0
-                # ADVICE r8: the carried state's deferred merge is part of
-                # the cost the r7 per-trigger numbers paid — materialize
-                # the final table INSIDE the timed region so txn/s is
-                # end-to-end, and stamp the ingest-only figure separately.
-                final.count()
-                mb_s = time.perf_counter() - t0
-                n_txn = 150 * len(mb_log)
-                aria["stream_multibatch"] = {
-                    "n_batches": len(mb_log),
-                    "drain_sec": round(mb_s, 3),
-                    "ingest_only_sec": round(ingest_s, 3),
-                    "txn_per_sec": round(n_txn / mb_s, 1) if mb_s else None,
-                }
-                print(
-                    f"# aria_stream_multibatch: {mb_s:.3f}s ({len(mb_log)} batches, "
-                    f"ingest {ingest_s:.3f}s)",
-                    file=sys.stderr,
-                )
-            finally:
-                shutil.rmtree(d, ignore_errors=True)
-
-            # r8 verdict item 4: the SUSTAINED ingest probe behind the
-            # README headline — 10 state-carrying 150-txn triggers driven
-            # straight through stream_drain_step (per-trigger walls are
-            # the point; the streaming runtime hides trigger boundaries).
-            # Ops are pre-materialized so generation stays outside the
-            # timed region; the final-table materialization is INSIDE it.
-            from bishe_gpu_database_spark.aria.engine import (
-                StreamDrainState,
-                stream_drain_step,
-            )
-
-            n_sustained = 10
-            sus_ops = [
-                gen_ops(
-                    spark, n_txns=150, max_ops=30, n_keys=2000, write_pct=40,
-                    seed=f"bench_sus{i}",
-                ).localCheckpoint()
-                for i in range(n_sustained)
-            ]
-            kv_sus = gen_kv(spark, n_keys=2000, seed="bench_sus_kv")
-            state = StreamDrainState(kv_sus)
-            walls = []
-            t0 = time.perf_counter()
-            for ops_i in sus_ops:
-                tt = time.perf_counter()
-                stream_drain_step(state, ops_i, reorder=True)
-                walls.append(round(time.perf_counter() - tt, 3))
-            state.table().count()  # fold the memtable: end-to-end cost
-            sus_s = time.perf_counter() - t0
-            aria["stream_sustained"] = {
-                "n_batches": n_sustained,
-                "drain_sec": round(sus_s, 3),
-                "txn_per_sec": round(150 * n_sustained / sus_s, 1),
-                "per_trigger_sec": walls,
-                # ADVICE r9: sustained runs the 2000-key PREFETCH path
-                # (all keys cached on first touch), so probe_jobs is
-                # expected 0 by construction — unlike stream_probe_path,
-                # whose probe_jobs is deltaed against its warm-up probe.
-                "probe_jobs": state.probe_jobs,
-                "flush_jobs": state.flush_jobs,
-            }
-            print(
-                f"# aria_stream_sustained: {sus_s:.3f}s ({n_sustained} triggers, "
-                f"{round(150 * n_sustained / sus_s, 1)} txn/s)",
-                file=sys.stderr,
-            )
-
-            # r8 verdict item 5: the LARGE-KEY-UNIVERSE regime — base key
-            # count ABOVE key_cache_bound, so the per-trigger broadcast
-            # existence probe (engine.py:_resolve_existence's join path),
-            # not the all-keys prefetch, is the measured path. probe_jobs
-            # proves it (one bounded probe per trigger of fresh keys).
-            big_n = 1_200_000  # > the production default key_cache_bound (1M)
-            kv_big = gen_kv(spark, n_keys=big_n, seed="bench_big_kv")
-            state_big = StreamDrainState(kv_big)
-            big_ops = [
-                gen_ops(
-                    spark, n_txns=150, max_ops=30, n_keys=big_n, write_pct=40,
-                    seed=f"bench_big{i}",
-                ).localCheckpoint()
-                for i in range(5)
-            ]
-            # Warm the one-time first-touch machinery (the base0.count()
-            # size check) OUTSIDE the timed region — trigger 1's wall
-            # must measure the steady-state per-trigger probe cost, not
-            # a job that never recurs (r9 review finding).
-            state_big._resolve_existence({1})
-            if state_big.all_keys_cached:  # fail loudly, not via bare assert
-                raise RuntimeError(
-                    "probe path not engaged: all_keys_cached — raise big_n "
-                    "above key_cache_bound"
-                )
-            probe_jobs_warm = state_big.probe_jobs
-            big_walls = []
-            t0 = time.perf_counter()
-            for ops_i in big_ops:
-                tt = time.perf_counter()
-                stream_drain_step(state_big, ops_i, reorder=True)
-                big_walls.append(round(time.perf_counter() - tt, 3))
-            state_big.table().count()
-            big_s = time.perf_counter() - t0
-            aria["stream_probe_path"] = {
-                "n_keys": big_n,
-                "key_cache_bound": state_big.key_cache_bound,
-                "all_keys_cached": state_big.all_keys_cached,
-                "n_batches": len(big_ops),
-                "drain_sec": round(big_s, 3),
-                "txn_per_sec": round(150 * len(big_ops) / big_s, 1),
-                "per_trigger_sec": big_walls,
-                "probe_jobs": state_big.probe_jobs - probe_jobs_warm,
-                "flush_jobs": state_big.flush_jobs,
-            }
-            print(
-                f"# aria_stream_probe_path: {big_s:.3f}s ({len(big_ops)} triggers, "
-                f"{state_big.probe_jobs} probe jobs)",
-                file=sys.stderr,
-            )
-
-            # r9 verdict item 5: the FLUSH path in the SAME big-key
-            # regime — flush_threshold set below one trigger's write-set
-            # size, so every trigger ends in a memtable fold into the
-            # 1.2M-row base (one distributed anti-join + union +
-            # checkpoint; the reference's epoch-boundary install +
-            # device migration, src/cuda/hashTable.cuh:165-200).
-            # flush_jobs >= 1 proves the path runs at this scale;
-            # flush_secs is its wall share of the trigger walls.
-            state_fl = StreamDrainState(kv_big, flush_threshold=1_000)
-            state_fl._resolve_existence({1})  # first-touch warm-up, as above
-            fl_ops = [
-                gen_ops(
-                    spark, n_txns=150, max_ops=30, n_keys=big_n, write_pct=40,
-                    seed=f"bench_fl{i}",
-                ).localCheckpoint()
-                for i in range(3)
-            ]
-            fl_walls = []
-            t0 = time.perf_counter()
-            for ops_i in fl_ops:
-                tt = time.perf_counter()
-                stream_drain_step(state_fl, ops_i, reorder=True)
-                fl_walls.append(round(time.perf_counter() - tt, 3))
-            state_fl.table().count()
-            fl_s = time.perf_counter() - t0
-            if state_fl.flush_jobs < 1:  # the probe's whole point
-                raise RuntimeError(
-                    "flush path not engaged: flush_jobs=0 — lower "
-                    "flush_threshold below the per-trigger write-set size"
-                )
-            aria["stream_flush_path"] = {
-                "n_keys": big_n,
-                "flush_threshold": state_fl.flush_threshold,
-                "n_batches": len(fl_ops),
-                "drain_sec": round(fl_s, 3),
-                "txn_per_sec": round(150 * len(fl_ops) / fl_s, 1),
-                "per_trigger_sec": fl_walls,
-                "flush_jobs": state_fl.flush_jobs,
-                "flush_secs": round(state_fl.flush_secs, 3),
-                "flush_share": round(state_fl.flush_secs / fl_s, 3) if fl_s else None,
-            }
-            print(
-                f"# aria_stream_flush_path: {fl_s:.3f}s ({state_fl.flush_jobs} "
-                f"flushes, {state_fl.flush_secs:.3f}s in flush)",
-                file=sys.stderr,
-            )
-        except Exception as e:  # never fail the bench line
-            print(f"# aria drain failed: {e}", file=sys.stderr, flush=True)
-
-        sf1_probe = _sf1_block(spark, sf_dir)
-
-        sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-        # Anchor normalization (r5 verdict item 2): the box swings 1.5-2×
-        # between sessions, so absolute seconds are not comparable across
-        # rounds. Every query's p50 is also reported as a ratio to the SAME
-        # SESSION's q1 p50 — round-over-round comparisons should use these
-        # ratios (bench_check.py consumes them). Placed at the END of the
-        # JSON so the driver's tail-truncated capture keeps them.
-        anchor_p50 = per_query_p50.get(probe_name) or min(probes)
-        anchor_ratios = {
-            name: round(p50 / anchor_p50, 2) for name, p50 in per_query_p50.items()
-        }
-        return {
-                    "metric": "headline_query_wall_seconds",
-                    "value": round(total, 3),
-                    "unit": "sec",
-                    "queries": per_query,
-                    "queries_p50": per_query_p50,
-                    "noise_probe": {
-                        "query": probe_name,
-                        "start": probes[0],
-                        "middle": probes[1],
-                        "end": probes[2],
-                    },
-                    "noise_spread": round(
-                        (max(probes) - min(probes)) / max(min(probes), 1e-9), 3
-                    ),
-                    "aria": aria,
-                    "sf1_probe": sf1_probe,
-                    "n_registered_queries": len(REGISTRY),
-                    "anchor": {"query": probe_name, "p50_sec": anchor_p50},
-                    "anchor_ratios_p50": anchor_ratios,
-                    "sf": float(sf) if sf else None,
-        }
-
-    payload = run_with_noise_defense(
-        measure,
-        retries=int(os.environ.get("SPARK_GRAFT_NOISE_RETRIES", "2")),
-        cooldown_sec=float(os.environ.get("SPARK_GRAFT_NOISE_COOLDOWN", "120")),
-    )
-    # Full payload to the local artifact: the driver's BENCH_r{N}.json
-    # keeps only the last 2000 chars of stdout, so the committed
-    # BENCH_LOCAL*.json is the lossless record bench_check.py regresses
-    # against. stdout gets ONLY the compact summary line (r9 verdict
-    # item 1) so the driver's tail capture parses it whole.
-    local = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try:
-        with open(local, "w") as fh:
-            json.dump(payload, fh, indent=1)
-    except OSError as e:
-        print(f"# local bench artifact not written: {e}", file=sys.stderr)
-    print(f"# full payload: {json.dumps(payload)}", file=sys.stderr, flush=True)
-    line = json.dumps(compact_payload(payload, local), separators=(",", ":"))
-    if len(line) > 1950:  # the driver tail keeps 2000 chars
+    per_query: dict[str, float] = {}
+    for name in HEADLINE:
+        times = sorted(_run_noop(spark, name, sf_dir) for _ in range(REPS))
+        per_query[name] = round(times[0], 3)
         print(
-            f"# WARNING: compact line {len(line)} chars — nearing the "
-            "driver's 2000-char tail; trim HEADLINE or the summary fields",
+            f"# {name}: min {times[0]:.3f}s p50 {times[REPS // 2]:.3f}s",
             file=sys.stderr,
+            flush=True,
         )
-    print(line, flush=True)
+    print(driver_line(per_query, sf_dir), flush=True)
 
 
 if __name__ == "__main__":

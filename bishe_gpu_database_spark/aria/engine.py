@@ -239,7 +239,11 @@ def run_batch(
     rows = _collect_batch(ops, new_cols, driver_sim_threshold)
     if len(rows) > driver_sim_threshold:
         return _drain_distributed(
-            kv, ops, reorder=reorder, insert_missing=insert_missing, max_epochs=max_epochs
+            kv.localCheckpoint(),
+            ops,
+            reorder=reorder,
+            insert_missing=insert_missing,
+            max_epochs=max_epochs,
         )
     # eager=False pins kv (probe and final merge must observe one table)
     # without a dedicated materialization job — the existence policy (or
@@ -338,7 +342,7 @@ def _drain_rows(
 
 
 def _drain_distributed(
-    kv: DataFrame,
+    base: DataFrame,
     ops: DataFrame,
     *,
     reorder: bool,
@@ -346,12 +350,12 @@ def _drain_distributed(
     max_epochs: int,
 ) -> tuple[DataFrame, list[dict]]:
     """The distributed epoch loop for batches above the driver bound (see
-    run_batch): checkpoint batch and table, probe existence once, run
-    ``_drain_loop`` at batch width, merge the lazy delta over the table."""
-    spark = kv.sparkSession
-    value_cols = [c for c in kv.columns if c != "k"]
+    run_batch) over a table ``base`` the caller has checkpointed:
+    checkpoint the batch, probe existence once, run ``_drain_loop`` at
+    batch width, merge the lazy delta over the table."""
+    spark = base.sparkSession
+    value_cols = [c for c in base.columns if c != "k"]
     ops0 = ops.localCheckpoint()
-    base = kv.localCheckpoint()
     # Collect-phase bookkeeping seeds from the RAW batch (see _drain_rows).
     cur = {r[0] for r in ops0.select("tid").distinct().collect()}
     if not insert_missing:

@@ -938,7 +938,9 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the fan-out it saved at every tested scale (max prefix group
     size here is 4 — candidate fan-out is already rarity-bounded), so
     the lexical order stays."""
-    tau = 0.3
+    # tau = 3/10 as one exact rational: the prefix length, the length
+    # filter and the verify all derive from it in integer arithmetic.
+    tau_num, tau_den = 3, 10
     d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     sets = (
@@ -947,7 +949,9 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # read 3x (prefix index + both verify sides)
         .filter(F.col("n") > 0)
     )
-    plen = (F.col("n") - F.ceil(F.col("n") * F.lit(tau)) + 1).cast("int")
+    # n - ceil(tau*n) + 1, the ceiling as an integer division.
+    ceil_tau_n = F.expr(f"({tau_num} * n + {tau_den - 1}) div {tau_den}")
+    plen = (F.col("n") - ceil_tau_n + 1).cast("int")
     pref = sets.select(
         "doc_id",
         "n",
@@ -960,8 +964,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.p") == F.col("b.p"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
-                10 * F.least(F.col("a.n"), F.col("b.n"))
-                >= 3 * F.greatest(F.col("a.n"), F.col("b.n"))
+                tau_den * F.least(F.col("a.n"), F.col("b.n"))
+                >= tau_num * F.greatest(F.col("a.n"), F.col("b.n"))
             ),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -974,7 +978,10 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .filter(13 * F.col("n_inter") >= 3 * (F.col("n_a") + F.col("n_b")))
+        .filter(
+            (tau_num + tau_den) * F.col("n_inter")
+            >= tau_num * (F.col("n_a") + F.col("n_b"))
+        )
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 

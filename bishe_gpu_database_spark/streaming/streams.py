@@ -235,7 +235,7 @@ def run_to_memory(df: DataFrame, name: str) -> StreamingQuery:
     q = (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append" if not df.isStreaming else "append")
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )

@@ -794,7 +794,7 @@ def main() -> None:
         kv = gen_kv(spark, n_keys=base_n, seed="scale_ob_kv")
         st = StreamDrainState(kv)
         # First-touch machinery (base count check) outside the timed
-        # region, same discipline as bench.py's stream_probe_path.
+        # region, so every timed trigger pays only its steady-state probe.
         st._resolve_existence({1})
         if st.all_keys_cached:
             raise SystemExit(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 import os
+from dataclasses import dataclass
 
 import duckdb
 import pytest
@@ -25,6 +26,44 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+# Iterative drivers plan per-epoch; their inner plans are covered by the
+# single-epoch queries, so the whole-registry sweeps skip them.
+SWEEP_SKIP = {
+    "aria_drain_batch",
+    "aria_drain_skewed",
+    "aria_drain_final_state",
+    "aria_drain_schedule",
+}
+
+
+@dataclass(frozen=True)
+class SweepPlan:
+    """What the whole-registry sweeps read from one build of a query at
+    SF_SMALL, taken right after the build."""
+
+    formatted: str
+    simple: str
+    windows: list[dict]
+
+
+@pytest.fixture(scope="session")
+def sweep_plans(spark) -> dict[str, SweepPlan]:
+    """Every registered query outside SWEEP_SKIP, built once at SF_SMALL
+    and shared by tests/test_plan_sweep.py and
+    tests/test_fact_window_sweep.py."""
+    from bishe_gpu_database_spark.plans import fact_windows, formatted_plan, simple_plan
+    from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    out = {}
+    for name, spec in sorted(REGISTRY.items()):
+        if name in SWEEP_SKIP:
+            continue
+        df = spec.fn(spark, SF_SMALL)
+        out[name] = SweepPlan(formatted_plan(df), simple_plan(df), fact_windows(df))
+    return out
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

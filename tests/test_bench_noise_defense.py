@@ -1,13 +1,11 @@
-"""r8 (r7 verdict item 2): bench.py defends itself against dirty
-sessions. BENCH_r07.json shipped with noise_spread 2.631 vs the repo's
-<0.6 clean bar, and every apparent regression in it was a measurement
-artifact — the official record must cool down, re-measure, and stamp
-noise_clean so a polluted payload is self-describing. Pure-Python test
-via the injected measure/sleep hooks; no Spark."""
+"""bench.py's driver surface, without Spark: the HEADLINE list that
+perfbench/ imports, and the one JSON line the driver parses from the
+last 2,000 chars of stdout."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import sys
 
@@ -24,163 +22,23 @@ def _bench():
     return mod
 
 
-def test_clean_first_try_no_retry():
-    bench = _bench()
-    calls, slept = [], []
-    payload = bench.run_with_noise_defense(
-        lambda: calls.append(1) or {"noise_spread": 0.2},
-        bar=0.6,
-        retries=2,
-        cooldown_sec=99,
-        sleep=slept.append,
-        log=lambda m: None,
-    )
-    assert len(calls) == 1 and slept == []
-    assert payload["noise_clean"] is True
-    assert payload["noise_attempts"] == [0.2]
-    assert payload["noise_clean_bar"] == 0.6
-
-
-def test_dirty_then_clean_retries_with_cooldown():
-    bench = _bench()
-    spreads = iter([2.6, 1.1, 0.4])
-    slept = []
-    payload = bench.run_with_noise_defense(
-        lambda: {"noise_spread": next(spreads)},
-        bar=0.6,
-        retries=2,
-        cooldown_sec=120,
-        sleep=slept.append,
-        log=lambda m: None,
-    )
-    assert slept == [120, 120]  # cooled down before each re-measure
-    assert payload["noise_clean"] is True
-    assert payload["noise_attempts"] == [2.6, 1.1, 0.4]
-    assert payload["noise_spread"] == 0.4  # final payload is the clean pass
-
-
-def test_never_clean_is_stamped_dirty():
-    bench = _bench()
-    payload = bench.run_with_noise_defense(
-        lambda: {"noise_spread": 3.0},
-        bar=0.6,
-        retries=2,
-        cooldown_sec=1,
-        sleep=lambda s: None,
-        log=lambda m: None,
-    )
-    assert payload["noise_clean"] is False
-    assert payload["noise_attempts"] == [3.0, 3.0, 3.0]  # bounded retries
-
-
 def test_headline_list_unchanged_by_refactor():
-    """The measure() extraction must not have dropped headline coverage."""
     bench = _bench()
     assert len(bench.HEADLINE) == 28
+    assert len(set(bench.HEADLINE)) == 28
     assert bench.HEADLINE[0] == "q1_pricing_summary"
 
 
-def test_best_attempt_kept_when_never_clean():
-    """r10 (r9 verdict item 1): BENCH_r09 shipped attempt 3's 1.427
-    spread when attempt 2 measured 0.659 — the defense must keep the
-    LOWEST-spread attempt, not the last one."""
-    bench = _bench()
-    spreads = iter([(0.806, "a1"), (0.659, "a2"), (1.427, "a3")])
-    payload = bench.run_with_noise_defense(
-        lambda: (lambda s: {"noise_spread": s[0], "tag": s[1]})(next(spreads)),
-        bar=0.6,
-        retries=2,
-        cooldown_sec=1,
-        sleep=lambda s: None,
-        log=lambda m: None,
-    )
-    assert payload["tag"] == "a2"
-    assert payload["noise_spread"] == 0.659
-    assert payload["noise_clean"] is False
-    assert payload["noise_attempts"] == [0.806, 0.659, 1.427]
-
-
-def test_retry_stops_at_first_clean_attempt():
-    bench = _bench()
-    spreads = iter([0.9, 0.3, 0.1])
-    payload = bench.run_with_noise_defense(
-        lambda: {"noise_spread": next(spreads)},
-        bar=0.6,
-        retries=2,
-        cooldown_sec=1,
-        sleep=lambda s: None,
-        log=lambda m: None,
-    )
-    assert payload["noise_spread"] == 0.3  # did not burn the third attempt
-    assert payload["noise_attempts"] == [0.9, 0.3]
-
-
-def _full_payload(n_queries: int = 40) -> dict:
-    # 22-char names = the real HEADLINE's average (q1_pricing_summary 18,
-    # events_attribution_u_shaped 27); 40 queries = 1.4x headroom over
-    # the actual 28-query headline.
-    qs = {f"operator_query_nm_{i:02d}": round(0.1 + i * 0.037, 3)
-          for i in range(n_queries)}
-    per_probe = {"txn_per_sec": 487.2, "n_keys": 1_200_000, "flush_jobs": 3,
-                 "per_trigger_sec": [0.5] * 5, "drain_sec": 2.5}
-    return {
-        "metric": "headline_query_wall_seconds",
-        "value": round(sum(qs.values()), 3),
-        "unit": "sec",
-        "queries": qs,
-        "queries_p50": {k: round(v * 1.1, 3) for k, v in qs.items()},
-        "noise_probe": {"query": "q1", "start": 0.3, "middle": 0.31, "end": 0.33},
-        "noise_spread": 0.1,
-        "noise_clean": True,
-        "noise_attempts": [0.1],
-        "aria": {
-            "txn_per_sec": 163.6,
-            "drain_150txn_sec": 0.917,
-            "batch200": dict(per_probe),
-            "batch200_contended": dict(per_probe),
-            "stream_multibatch": dict(per_probe),
-            "stream_sustained": dict(per_probe),
-            "stream_probe_path": dict(per_probe),
-            "stream_flush_path": dict(per_probe, flush_secs=1.2, flush_share=0.48),
-        },
-        "n_registered_queries": 319,
-        "anchor": {"query": "q1_pricing_summary", "p50_sec": 0.341},
-        "anchor_ratios_p50": {k: 1.0 for k in qs},
-        "sf": 0.1,
-    }
-
-
 def test_compact_line_fits_driver_tail():
-    """r9 verdict item 1: the driver keeps the LAST 2000 chars of
-    stdout; BENCH_r08/r09 were parsed:null because the full payload
-    line blew that. The compact line must fit with margin even at a
-    40-query headline, and must keep the driver contract fields."""
-    import json
-
+    """Even a 40-query headline (1.4x the real 28) fits the driver's
+    tail with margin, and the line carries exactly the contract keys."""
     bench = _bench()
-    payload = _full_payload(40)
-    compact = bench.compact_payload(payload, "BENCH_LOCAL_r10.json")
-    # Same serialization main() prints (compact separators).
-    line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) < 1900, f"compact line {len(line)} chars"
-    for key in ("metric", "value", "unit", "queries", "sf"):
-        assert key in compact
-    assert compact["queries"] == payload["queries"]
-    assert compact["noise_clean"] is True
-    assert compact["aria_txn_per_sec"]["flush_path"] == 487.2
-    assert compact["aria_txn_per_sec"]["drain150"] == 163.6
-    assert compact["portfolio_p50_sum_sec"] == round(
-        sum(payload["queries_p50"].values()), 3
-    )
-    assert compact["detail"] == "BENCH_LOCAL_r10.json"
-
-
-def test_compact_line_survives_missing_aria():
-    import json
-
-    bench = _bench()
-    payload = _full_payload(28)
-    payload["aria"] = {}
-    compact = bench.compact_payload(payload, "x.json")
-    assert compact["aria_txn_per_sec"] == {}
-    assert len(json.dumps(compact)) < 1900
+    # 22-char names = the real HEADLINE's average length.
+    qs = {f"operator_query_nm_{i:02d}": round(0.1 + i * 0.037, 3) for i in range(40)}
+    line = bench.driver_line(qs, "/data/sf0.1")
+    assert len(line) < 1900, f"driver line {len(line)} chars"
+    payload = json.loads(line)
+    assert set(payload) == {"metric", "value", "unit", "queries", "sf"}
+    assert payload["queries"] == qs
+    assert payload["value"] == round(sum(qs.values()), 3)
+    assert payload["sf"] == 0.1

@@ -16,8 +16,8 @@ below."""
 from __future__ import annotations
 
 from bishe_gpu_database_spark.plans import fact_windows, low_card_window_offenders
-from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
-from tests.conftest import SF_MEDIUM, SF_SMALL
+from bishe_gpu_database_spark.registry import REGISTRY
+from tests.conftest import SF_MEDIUM
 
 # Justified low-cardinality windows: each entry's window input is BOUNDED
 # by construction — never proportional to the fact table — so capping its
@@ -43,26 +43,16 @@ _LOW_CARD_OK: dict[str, str] = {
     "and the stage-2 global window is frontier-sized (see _SP_WINDOW_OK)",
 }
 
-# Iterative drivers plan per-epoch; inner plans covered by single-epoch
-# queries (same skip set as test_plan_sweep).
-_SKIP = {
-    "aria_drain_batch",
-    "aria_drain_skewed",
-    "aria_drain_final_state",
-    "aria_drain_schedule",
-}
 
-
-def test_no_low_cardinality_fact_windows(spark):
-    _ensure_loaded()
+def test_no_low_cardinality_fact_windows(spark, sweep_plans):
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        if name in _SKIP or name in _LOW_CARD_OK:
+    for name, sp in sweep_plans.items():
+        if name in _LOW_CARD_OK:
             continue
-        small = fact_windows(spec.fn(spark, SF_SMALL))
+        small = sp.windows
         if not small:  # no partitioned windows at all — skip the 2nd build
             continue
-        medium = fact_windows(spec.fn(spark, SF_MEDIUM))
+        medium = fact_windows(REGISTRY[name].fn(spark, SF_MEDIUM))
         bad = low_card_window_offenders(small, medium)
         if bad:
             offenders[name] = bad

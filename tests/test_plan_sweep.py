@@ -6,13 +6,7 @@ centroid / hyperplane / query vector) are whitelisted explicitly."""
 
 from __future__ import annotations
 
-from bishe_gpu_database_spark.plans import (
-    formatted_plan,
-    simple_plan,
-    single_partition_sort_offenders,
-)
-from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
-from tests.conftest import SF_SMALL
+from bishe_gpu_database_spark.plans import single_partition_sort_offenders
 
 # Intentional broadcast nested-loop joins: small side is the algorithm's
 # constant factor (centroids, hyperplanes, query batch), not a data side.
@@ -90,14 +84,6 @@ _BNLJ_OK = {"join_cross", "ann_cosine_topk", "ann_ivf_topk", "ann_lsh_buckets",
             # are localCheckpoint-truncated out of the lineage).
             "linkage_em_reclassify", "linkage_em_converged",
             "linkage_em_fixpoint"}
-# Iterative drivers plan per-epoch; their inner plans are covered by the
-# single-epoch queries.
-_SKIP = {
-    "aria_drain_batch",
-    "aria_drain_skewed",
-    "aria_drain_final_state",
-    "aria_drain_schedule",
-}
 
 # Justified single-partition sorts/windows (r3 verdict item 2 red flag):
 # each entry's input at the exchange is BOUNDED — a post-aggregate table
@@ -117,14 +103,10 @@ _SP_WINDOW_OK: dict[str, str] = {
 }
 
 
-def test_no_plan_red_flags(spark):
-    _ensure_loaded()
+def test_no_plan_red_flags(sweep_plans):
     offenders = {}
-    for name, spec in sorted(REGISTRY.items()):
-        if name in _SKIP:
-            continue
-        df = spec.fn(spark, SF_SMALL)
-        plan = formatted_plan(df)
+    for name, sp in sweep_plans.items():
+        plan = sp.formatted
         bad = []
         if "CartesianProduct" in plan:
             bad.append("cartesian-product")
@@ -136,7 +118,7 @@ def test_no_plan_red_flags(spark):
         # single-partition exchange funnels the whole input through one
         # task. Caught structurally from the simple-plan tree.
         if name not in _SP_WINDOW_OK:
-            bad.extend(single_partition_sort_offenders(simple_plan(df)))
+            bad.extend(single_partition_sort_offenders(sp.simple))
         if bad:
             offenders[name] = bad
     assert not offenders, offenders

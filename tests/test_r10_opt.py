@@ -9,8 +9,9 @@ an optimization changes an operator's internals).
   probe above it) must produce identical drains — the same table, the
   same schedule.
 - The shared drain core's Spark job budget: the fast path and a warm
-  streamed step, counted by job group; and the distributed path leaves
-  the session conf as it found it.
+  streamed step, counted by job group; the stream's oversized-batch
+  fallback does not re-checkpoint its table; and the distributed path
+  leaves the session conf as it found it.
 """
 
 from __future__ import annotations
@@ -139,6 +140,28 @@ def test_drain_core_job_counts(spark, monkeypatch):
     stream_drain_step(state, ops)
     assert state.all_keys_cached
     assert _job_count(spark, "jc-warm", lambda: stream_drain_step(state, ops)) == 1
+
+
+def test_stream_fallback_reuses_checkpointed_base(spark):
+    """The stream's oversized-batch fallback hands the distributed drain
+    base0, which is already checkpointed, so it pays one job fewer than
+    the same drain through run_batch, which must checkpoint the table it
+    is given."""
+    kv = gen_kv(spark, n_keys=200)
+    ops = gen_ops(spark, n_txns=20, max_ops=6, n_keys=200, seed="r10fb")
+    state = StreamDrainState(kv)
+    base0 = state.base0
+    fallback = _job_count(
+        spark,
+        "jc-fallback",
+        lambda: stream_drain_step(state, ops, driver_sim_threshold=0),
+    )
+    batch = _job_count(
+        spark,
+        "jc-batch",
+        lambda: run_batch(base0, ops, driver_sim_threshold=0)[0].localCheckpoint(),
+    )
+    assert fallback < batch
 
 
 _DRAIN_CONF_KEYS = (
