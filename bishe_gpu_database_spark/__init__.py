@@ -20,4 +20,4 @@ docstrings as ``ref: file:line`` for semantic parity only.
 
 __version__ = "0.1.0"
 
-from bishe_gpu_database_spark.session import get_spark, load_tables  # noqa: F401
+from bishe_gpu_database_spark.session import get_spark  # noqa: F401

@@ -134,7 +134,7 @@ def _doc_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # become a quadratic candidate bomb and a giant fake duplicate
     # cluster. The oracle's unnest drops them naturally; the engine must
     # match (found by the r4 perturbed-fixture sweep,
-    # scripts/perturbed_parity.py). The predicate is the CHEAP token
+    # `scripts/sweep.py perturbed`). The predicate is the CHEAP token
     # count (zero shingles ⟺ tokens < width) — filtering on size(xs)
     # would let predicate pushdown inline the whole minhash expression
     # into the filter and evaluate it twice per row.

@@ -49,7 +49,7 @@ def emb_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are excluded by POLICY — cosine is undefined for them, and
     under ANSI mode a single zero vector turns the whole query into a
     DIVIDE_BY_ZERO job failure (found by the r4 perturbed-fixture sweep,
-    scripts/perturbed_parity.py). Magnitude/position operators (norms,
+    ``scripts/sweep.py perturbed``). Magnitude/position operators (norms,
     int8 quantization, PQ, centroids, PCA) keep the full table — zero is
     meaningful data there. Every cosine oracle carries the same
     ``_SQL_NONZERO`` predicate so both engines see one corpus."""

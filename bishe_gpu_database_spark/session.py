@@ -1,11 +1,8 @@
-"""SparkSession construction and fixture-table loading.
+"""SparkSession construction and session-conf scoping.
 
-The reference holds its one table in a process-global registry
-(ref: src/database/common/database.h:10-22); here the SparkSession catalog
-plays that role and every fixture parquet becomes a named temp view.
+Fixture tables are read through ``operators.relational.t()``.
 
-Scale notes (local[32] is the test rig; design target is a 1000-executor
-cluster on ~100 TB):
+Scale notes (design target is a 1000-executor cluster on ~100 TB):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   dynamic broadcast decisions replace any hand-tuned plan.
 - ``spark.sql.shuffle.partitions`` is a *default*; at cluster scale it is
@@ -21,7 +18,7 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 TABLE_NAMES = (
     "region",
@@ -36,21 +33,15 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(app_name: str = "bishe_gpu_database_spark") -> SparkSession:
-    """Build (or reuse) the session with scale-oriented defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Width override for cluster-shape testing: a 1000-executor deploy
-    # plans 2000+ shuffle partitions, and results must not depend on the
-    # partition count (the wide-parity sweep runs the full surface at
-    # 200 to pin that).
-    width = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    """Build (or reuse) the session with scale-oriented defaults. Cores
+    default to the process's CPU affinity."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", width)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -94,19 +85,3 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture parquet in ``sf_dir`` and register temp views.
-
-    Column pruning and predicate pushdown reach the parquet scan because
-    the frames stay lazy — nothing is materialized here.
-    """
-    tables: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            tables[name] = df
-    return tables

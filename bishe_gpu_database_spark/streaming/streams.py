@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
+from bishe_gpu_database_spark.session import scoped_conf
 
 
 def events_stream(
@@ -200,15 +201,9 @@ def _drain_to_memory(
         assert_checkpoint_width(spark, checkpoint_location)
         w = w.option("checkpointLocation", checkpoint_location)
         state_width = None
-    width_key = "spark.sql.shuffle.partitions"
-    saved_width = spark.conf.get(width_key)
-    if state_width is not None and int(saved_width) != state_width:
-        spark.conf.set(width_key, str(state_width))
-    try:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set(width_key, saved_width)
+    conf = {} if state_width is None else {"spark.sql.shuffle.partitions": str(state_width)}
+    with scoped_conf(spark, conf):
+        w.trigger(availableNow=True).start().awaitTermination()
     return spark.table(name)
 
 
@@ -296,11 +291,10 @@ def aria_foreach_batch(
     once per distinct key (static under insert_missing=False; small
     tables prefetch the whole key set). The r7 driver re-ran the full
     ``run_batch`` per trigger, re-materializing the whole table every
-    time (~0.9 s/trigger of repo overhead in
-    scripts/foreachbatch_breakdown.py); per-trigger cost is now ∝ the
-    batch alone — the asymptote continuous ingest into a 100 TB table
-    needs. Returned table = base0 ⟕ memtable (lazy; the caller's read
-    materializes it once)."""
+    time (~0.9 s/trigger of repo overhead, measured); per-trigger cost
+    is now ∝ the batch alone — the asymptote continuous ingest into a
+    100 TB table needs. Returned table = base0 ⟕ memtable (lazy; the
+    caller's read materializes it once)."""
     state = StreamDrainState(kv, **(state_kwargs or {}))
     epochs_log: list = []
 

@@ -107,7 +107,7 @@ def normalize_rows(columns, rows):
 
 def compare_structured(spark, sf_dir: str, fn, sql: str | None) -> dict:
     """The ONE canonical engine-vs-oracle comparator (used by the pytest
-    gate AND scripts/parity_artifact.py, so the committed evidence and
+    gate AND scripts/sweep.py, so the committed evidence and
     the test verdicts can never drift apart): run the Spark query and the
     DuckDB oracle, return per-aspect booleans plus normalized-value diffs
     in the driver's order-insensitive shape."""
@@ -150,13 +150,22 @@ def compare_structured(spark, sf_dir: str, fn, sql: str | None) -> dict:
     return out
 
 
+def oracle_mismatch(r: dict) -> str | None:
+    """Why a compare_structured result with an oracle fails; None when it
+    matches."""
+    if not r["schema_match"]:
+        return f"columns differ spark={r['_cols'][0]} duck={r['_cols'][1]}"
+    if not r["rows_match"]:
+        return f"row count spark={r['spark_rows']} duck={r['oracle_rows']}"
+    if not r["hash_match"]:
+        return f"values differ; first diffs {r['_diffs']}"
+    return None
+
+
 def compare_query_to_oracle(spark, sf_dir: str, name: str, fn, sql: str):
     """Pytest-facing wrapper over compare_structured: (ok, message)."""
     r = compare_structured(spark, sf_dir, fn, sql)
-    if not r["schema_match"]:
-        return False, f"{name}: columns differ spark={r['_cols'][0]} duck={r['_cols'][1]}"
-    if not r["rows_match"]:
-        return False, f"{name}: row count spark={r['spark_rows']} duck={r['oracle_rows']}"
-    if not r["hash_match"]:
-        return False, f"{name}: values differ; first diffs {r['_diffs']}"
+    why = oracle_mismatch(r)
+    if why:
+        return False, f"{name}: {why}"
     return True, f"{name}: OK ({r['spark_rows']} rows)"

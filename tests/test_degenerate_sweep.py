@@ -18,11 +18,21 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
-from scripts.degenerate_sweep import make_empty_sf_dir
 from tests.conftest import SF_SMALL
+
+
+def make_empty_sf_dir(base_sf: str, out_dir: str) -> None:
+    """Write a zero-row parquet per fixture table, schema copied from
+    ``base_sf`` so every query plans identically."""
+    for fname in sorted(os.listdir(base_sf)):
+        if not fname.endswith(".parquet"):
+            continue
+        schema = pq.read_schema(os.path.join(base_sf, fname))
+        pq.write_table(schema.empty_table(), os.path.join(out_dir, fname))
 
 
 @pytest.fixture(scope="module")

@@ -57,29 +57,41 @@ def test_stream_state_width_derivation(spark, monkeypatch, tmp_path):
     assert stream_state_width(spark, str(tmp_path)) == 17
 
 
-def test_stream_state_width_restores_session_conf(spark, tmp_path):
+@pytest.mark.parametrize("unset_first", [False, True])
+def test_stream_state_width_restores_session_conf(spark, tmp_path, unset_first):
     """_drain_to_memory must restore spark.sql.shuffle.partitions even
-    though the drain runs at the derived width."""
+    though the drain runs at the derived width — including a width that
+    was unset before, which must come back unset rather than pinned."""
     from pyspark.sql import functions as F
 
     from bishe_gpu_database_spark.streaming.streams import _drain_to_memory
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    spark.range(5).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
-    ).coalesce(1).write.mode("overwrite").parquet(str(src))
-    stream = spark.readStream.schema("k bigint, v double").parquet(str(src))
-    dd = stream.dropDuplicates(["k"])  # stateful, append-legal
-    out = _drain_to_memory(
-        spark,
-        dd.select("k"),
-        "r10_width_restore_probe",
-        state_width=2,
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert len(out.collect()) == 5
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key, None)
+    try:
+        if unset_first:
+            spark.conf.unset(key)
+        before = spark.conf.get(key, None)
+        src = tmp_path / "stream_src"
+        src.mkdir()
+        spark.range(5).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+        ).coalesce(1).write.mode("overwrite").parquet(str(src))
+        stream = spark.readStream.schema("k bigint, v double").parquet(str(src))
+        dd = stream.dropDuplicates(["k"])  # stateful, append-legal
+        out = _drain_to_memory(
+            spark,
+            dd.select("k"),
+            "r10_width_restore_probe",
+            state_width=2,
+        )
+        assert spark.conf.get(key, None) == before
+        assert len(out.collect()) == 5
+    finally:
+        if session is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, session)
 
 
 @pytest.mark.parametrize("reorder", [True, False])

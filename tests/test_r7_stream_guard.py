@@ -6,7 +6,7 @@ late-beyond-horizon ON ARRIVAL — engine-internal behavior an oracle
 cannot model portably. streams.events_stream therefore filters
 ts >= 1970-01-01 explicitly (symmetric with the runtime oracles); the
 BATCH read keeps every row. Surfaced by the perturbed-fixture
-timestamp axis (scripts/perturbed_parity.py)."""
+timestamp axis (`scripts/sweep.py perturbed`)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,6 @@
 """r8 (r7 verdict item 6): pin the FastSS output-bound adjudication.
 
-SCALE_r7 measured dedup_editdist_fastss at 2.91x under the skewed
+The r7 scale probe measured dedup_editdist_fastss at 2.91x under the skewed
 fixture's identical-name cliques and adjudicated it OUTPUT-bound: an
 edit-distance<=1 self-join must EMIT every C(m,2) pair of an m-record
 clique, so output — not candidate work — grows quadratically in clique
