@@ -19,14 +19,18 @@ shuffles land, and why the plan survives a 1000-executor cluster.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bishe_gpu_database_spark.registry import register
 
 D12 = "decimal(12,4)"
+
+log = logging.getLogger(__name__)
 
 
 def events_ts_to_micros(df: DataFrame) -> DataFrame:
@@ -70,13 +74,47 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     return df
 
 
+# The session confs that change the schema Spark infers from a parquet
+# footer (``nanosAsLong`` decides the raw ``events.ts`` type).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """What a footer-inferred schema depends on: the path, the file's (or
+    a written-once directory's ``_SUCCESS`` marker's) size and mtime, and
+    the schema-inference confs in effect."""
+    marker = os.path.join(path, "_SUCCESS") if os.path.isdir(path) else path
+    st = os.stat(marker)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    return (path, st.st_size, st.st_mtime_ns, confs)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with its schema memoized: inferring a
+    schema runs one Spark job to read a footer, a read given the schema
+    runs none."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def _raw_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The fixture parquet as-is (``events.ts`` normalized to micros)."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         return events_ts_to_micros(df)
-    return _ntz_to_ltz(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    return _ntz_to_ltz(_read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")))
 
 
 # Tables worth re-laying out: the fixture files are single-row-group, so
@@ -121,7 +159,7 @@ def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for old in _glob.glob(os.path.join(base, f"relayout_{sf_tag}_{name}_*")):
             if old != path:
                 _shutil.rmtree(old, ignore_errors=True)
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     # Scratch copies published by earlier engine versions may carry the
     # raw NTZ/nanos ts; normalize on read too so the contract ("t() hands
     # out TIMESTAMP micros") holds regardless of who wrote the copy.
@@ -130,27 +168,46 @@ def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _ntz_to_ltz(df)
 
 
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_NO_GENERATE_FILTERS = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one fixture table — filters/pruning push into parquet.
     Fact tables go through the engine's storage re-layout (see
-    ``_relayout_scan``); results are identical, scans parallelize.
+    ``_relayout_scan``); results are identical, scans parallelize. A
+    failed re-layout logs one warning and reads the raw fixture.
 
-    Also disables InferFiltersFromGenerate for the session: the rule
-    clones a Generate's child expression into `size(e)>0 AND isnotnull(e)`
+    Every scan is given its schema from an in-process memo, so a warm
+    ``t()`` starts no Spark job (inferring a schema reads a parquet footer
+    in a job of its own). The memo is keyed by the parquet path, its size
+    and ``st_mtime_ns`` (for a re-layout directory, those of its
+    ``_SUCCESS`` marker; the directory is written once and its name
+    carries the source fingerprint) and the session's schema-inference
+    confs (``_SCHEMA_CONFS``), so a rewritten fixture or a flipped
+    ``nanosAsLong`` misses.
+
+    Also appends InferFiltersFromGenerate to the session's excluded
+    optimizer rules, keeping any rule already there: the rule clones a
+    Generate's child expression into `size(e)>0 AND isnotnull(e)`
     filters, and for the computed arrays this engine explodes (minhash
     signatures, winnowing fingerprints, shingles) that inlined clone
     re-evaluates the whole array expression per lambda element —
     measured 470s vs 3s on text_winnow_fingerprint. Our generated arrays
     are never null and rarely empty, so the rule only ever costs."""
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    excluded = spark.conf.get(_EXCLUDED_RULES, "")
+    if _NO_GENERATE_FILTERS not in [r.strip() for r in excluded.split(",")]:
+        spark.conf.set(
+            _EXCLUDED_RULES, ",".join(filter(None, [excluded, _NO_GENERATE_FILTERS]))
+        )
     if name in _RELAYOUT_TABLES and os.environ.get("SPARK_GRAFT_RELAYOUT", "1") != "0":
         try:
             return _relayout_scan(spark, sf_dir, name)
-        except Exception:
-            pass  # scratch unavailable → fall back to the raw fixture
+        except Exception as e:
+            log.warning(
+                "re-layout of %s failed (%s: %s); reading the raw fixture",
+                name, type(e).__name__, e,
+            )
     return _raw_scan(spark, sf_dir, name)
 
 

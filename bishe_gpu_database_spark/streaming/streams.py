@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
+from bishe_gpu_database_spark.operators.relational import _read_parquet, events_ts_to_micros
 from bishe_gpu_database_spark.session import scoped_conf
 
 
@@ -36,7 +37,7 @@ def events_stream(
 
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = _read_parquet(spark, path).schema
     # FileStreamSource requires a directory; expose the fixture file
     # through a symlink dir (read-only testdata stays untouched). The dir
     # is keyed by a digest of the ABSOLUTE fixture path — basenames
@@ -59,8 +60,6 @@ def events_stream(
     raw = spark.readStream.schema(schema).format("parquet").load(stream_dir)
     # ts may arrive as raw nanos or a native micros timestamp depending on
     # the fixture generation — normalize (see operators.relational).
-    from bishe_gpu_database_spark.operators.relational import events_ts_to_micros
-
     out = events_ts_to_micros(raw)
     # PRE-EPOCH ingest guard (r7): a fresh streaming query's event-time
     # watermark initializes at the epoch, so a stateful operator treats a

@@ -66,6 +66,18 @@ def sweep_plans(spark) -> dict[str, SweepPlan]:
     return out
 
 
+def job_count(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return how many Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLE_NAMES:

@@ -25,6 +25,7 @@ from bishe_gpu_database_spark.aria.engine import (
     stream_drain_step,
 )
 from bishe_gpu_database_spark.aria.workload import gen_kv, gen_ops
+from tests.conftest import job_count as _job_count
 
 
 def _rows(df):
@@ -120,18 +121,6 @@ def test_fastpath_empty_ops(spark):
     out, stats = run_batch(kv, ops, reorder=True)
     assert stats == []
     assert _rows(out) == _rows(kv)
-
-
-def _job_count(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return how many Spark jobs it
-    started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_drain_core_job_counts(spark, monkeypatch):
