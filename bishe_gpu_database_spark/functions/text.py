@@ -52,12 +52,6 @@ def shingles_of(toks, n: int = 5) -> F.Column:
     )
 
 
-def word_shingles(col, n: int = 5) -> F.Column:
-    """Distinct n-word shingles straight from a text column (small inputs
-    only — see shingles_of for the two-step form used in hot paths)."""
-    return shingles_of(tokens(col), n)
-
-
 def minhash_sig_value(x_col, i_col) -> F.Column:
     """Universal-hash family h_i(x) = ((2i+1)·x + 1000003·i) mod p over
     48-bit shingle hashes. Exact in int64; identical in ANSI SQL."""

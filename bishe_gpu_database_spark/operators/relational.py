@@ -121,11 +121,14 @@ def _raw_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # they scan as ONE task no matter the core count. A real engine owns its
 # storage layout — ingest once into multi-file parquet at core-count
 # parallelism (write-once, atomic rename), and every subsequent scan of
-# the fact tables parallelizes. Disable with SPARK_GRAFT_RELAYOUT=0.
+# the fact tables parallelizes. The events copy is also the directory
+# ``streaming.streams.events_stream`` replays.
 _RELAYOUT_TABLES = {"lineitem", "orders", "events"}
 
 
-def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _relayout_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Directory of the multi-file re-layout copy of one fixture table,
+    written on first use (atomic rename) and reused after."""
     import tempfile
 
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
@@ -159,7 +162,11 @@ def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for old in _glob.glob(os.path.join(base, f"relayout_{sf_tag}_{name}_*")):
             if old != path:
                 _shutil.rmtree(old, ignore_errors=True)
-    df = _read_parquet(spark, path)
+    return path
+
+
+def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = _read_parquet(spark, _relayout_path(spark, sf_dir, name))
     # Scratch copies published by earlier engine versions may carry the
     # raw NTZ/nanos ts; normalize on read too so the contract ("t() hands
     # out TIMESTAMP micros") holds regardless of who wrote the copy.
@@ -200,7 +207,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set(
             _EXCLUDED_RULES, ",".join(filter(None, [excluded, _NO_GENERATE_FILTERS]))
         )
-    if name in _RELAYOUT_TABLES and os.environ.get("SPARK_GRAFT_RELAYOUT", "1") != "0":
+    if name in _RELAYOUT_TABLES:
         try:
             return _relayout_scan(spark, sf_dir, name)
         except Exception as e:

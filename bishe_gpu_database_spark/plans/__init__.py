@@ -257,18 +257,6 @@ def low_card_window_offenders(
     return offenders
 
 
-def plan_has(df: DataFrame, *needles: str) -> bool:
-    """True iff every needle appears in the formatted physical plan."""
-    plan = formatted_plan(df)
-    return all(n in plan for n in needles)
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    """Assert the parquet scan received pushed filters."""
-    plan = formatted_plan(df)
-    assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan, plan
-
-
 def assert_broadcast_join(df: DataFrame) -> None:
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan

@@ -193,10 +193,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified field-exact against the same md5 derivation in SQL."""
     from bishe_gpu_database_spark.sources.ycsb_source import YcsbDataSource
 
-    try:
-        spark.dataSource.register(YcsbDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(YcsbDataSource)  # re-registering is a no-op
     df = (
         spark.read.format("ycsb")
         .option("n_keys", 1000)

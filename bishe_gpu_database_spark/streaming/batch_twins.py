@@ -13,6 +13,14 @@ from pyspark.sql import functions as F
 
 from bishe_gpu_database_spark.operators.relational import dec, t
 from bishe_gpu_database_spark.registry import register
+from bishe_gpu_database_spark.streaming.streams import (
+    run_chained_stateful_runtime,
+    run_dedup_runtime,
+    run_interval_join_runtime,
+    run_session_runtime,
+    run_sliding_runtime,
+    run_tumbling_runtime,
+)
 
 
 @register(
@@ -133,7 +141,12 @@ def stream_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# The actual Structured Streaming runtime, oracle-checked: replay events
+# as a file stream, watermarked tumbling counts, availableNow drain.
+# Append mode emits exactly the windows closed by the final watermark —
+# the oracle computes that same set in SQL (every window except those
+# still open at max event time).
+register(
     "stream_runtime_tumbling",
     oracle="""
     WITH mx AS (SELECT max(ts) AS m FROM events)
@@ -145,16 +158,7 @@ def stream_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, mx.m
     HAVING time_bucket(INTERVAL 1 HOUR, min(ts)) + INTERVAL 1 HOUR <= mx.m
     """,
-)
-def stream_runtime_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual Structured Streaming runtime, oracle-checked: replay
-    events as a file stream, watermarked tumbling counts, availableNow
-    drain. Append mode emits exactly the windows closed by the final
-    watermark — the oracle computes that same set in SQL (every window
-    except those still open at max event time)."""
-    from bishe_gpu_database_spark.streaming.streams import run_tumbling_runtime
-
-    return run_tumbling_runtime(spark, sf_dir)
+)(run_tumbling_runtime)
 
 
 @register(
@@ -226,7 +230,13 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# The actual session-window streaming runtime, oracle-checked: the state
+# store merges overlapping [ts, ts+gap) windows per user; append mode
+# emits exactly the sessions closed by the final watermark. The oracle
+# rebuilds the same sessions with gap-and-island SQL (new session iff
+# the gap to the previous event is ≥ 30 min — half-open window
+# semantics) and applies the same emission cutoff.
+register(
     "stream_runtime_session",
     oracle="""
     WITH mx AS (SELECT max(ts) AS m FROM events),
@@ -256,20 +266,15 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg, mx
     WHERE session_end <= mx.m
     """,
-)
-def stream_runtime_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual session-window streaming runtime, oracle-checked: the
-    state store merges overlapping [ts, ts+gap) windows per user; append
-    mode emits exactly the sessions closed by the final watermark. The
-    oracle rebuilds the same sessions with gap-and-island SQL (new session
-    iff the gap to the previous event is ≥ 30 min — half-open window
-    semantics) and applies the same emission cutoff."""
-    from bishe_gpu_database_spark.streaming.streams import run_session_runtime
-
-    return run_session_runtime(spark, sf_dir)
+)(run_session_runtime)
 
 
-@register(
+# The actual sliding-window streaming runtime, oracle-checked: 1-hour
+# windows sliding every 15 minutes (each event fans out to 4 windows —
+# Spark's Expand under the hood), watermarked append emission. The
+# oracle reproduces the fan-out with a 4-offset cross join and applies
+# the same end ≤ max-event-time cutoff.
+register(
     "stream_runtime_sliding",
     oracle="""
     WITH mx AS (SELECT max(ts) AS m FROM events),
@@ -286,16 +291,7 @@ def stream_runtime_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY window_start, event_type, mx.m
     HAVING window_start + INTERVAL 1 HOUR <= mx.m
     """,
-)
-def stream_runtime_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual sliding-window streaming runtime, oracle-checked: 1-hour
-    windows sliding every 15 minutes (each event fans out to 4 windows —
-    Spark's Expand under the hood), watermarked append emission. The
-    oracle reproduces the fan-out with a 4-offset cross join and applies
-    the same end ≤ max-event-time cutoff."""
-    from bishe_gpu_database_spark.streaming.streams import run_sliding_runtime
-
-    return run_sliding_runtime(spark, sf_dir)
+)(run_sliding_runtime)
 
 
 @register(
@@ -330,25 +326,28 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# The actual streaming-dedup runtime, oracle-checked:
+# dropDuplicatesWithinWatermark emits each (user, type) key exactly once
+# per watermark horizon through the state store; the emitted key set
+# equals SELECT DISTINCT — the batch contract the runtime must reproduce
+# (the surviving representative row is engine-internal, so only keys are
+# projected). Complements stream_dedup_by_key (the batch twin with
+# first-event semantics) with the real state-store path.
+register(
     "stream_runtime_dedup",
     oracle="""SELECT DISTINCT user_id, event_type FROM events
     WHERE ts >= TIMESTAMP '1970-01-01'  -- pre-epoch ingest guard""",
-)
-def stream_runtime_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual streaming-dedup runtime, oracle-checked:
-    dropDuplicatesWithinWatermark emits each (user, type) key exactly
-    once per watermark horizon through the state store; the emitted key
-    set equals SELECT DISTINCT — the batch contract the runtime must
-    reproduce (the surviving representative row is engine-internal, so
-    only keys are projected). Complements stream_dedup_by_key (the batch
-    twin with first-event semantics) with the real state-store path."""
-    from bishe_gpu_database_spark.streaming.streams import run_dedup_runtime
-
-    return run_dedup_runtime(spark, sf_dir)
+)(run_dedup_runtime)
 
 
-@register(
+# The actual stream-stream interval-join RUNTIME, oracle-checked
+# (companion to the ``stream_interval_join`` batch twin): inner-join
+# emission is immediate-on-match, so availableNow over the replayed
+# fixture emits exactly the batch join's rows and a plain SQL oracle
+# hash-gates the runtime end-to-end — state stores, watermark
+# bookkeeping, and all. Completes the registered runtime family
+# (tumbling / session / sliding / dedup / interval join).
+register(
     "stream_runtime_interval",
     oracle="""
     SELECT p.event_id AS purchase_id, p.user_id, p.ts AS p_ts,
@@ -361,21 +360,16 @@ def stream_runtime_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts >= p.ts - INTERVAL 30 MINUTE
      AND c.ts <= p.ts
     """,
-)
-def stream_runtime_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual stream-stream interval-join RUNTIME, oracle-checked
-    (companion to the ``stream_interval_join`` batch twin): inner-join
-    emission is immediate-on-match, so availableNow over the replayed
-    fixture emits exactly the batch join's rows and a plain SQL oracle
-    hash-gates the runtime end-to-end — state stores, watermark
-    bookkeeping, and all. Completes the registered runtime family
-    (tumbling / session / sliding / dedup / interval join)."""
-    from bishe_gpu_database_spark.streaming.streams import run_interval_join_runtime
-
-    return run_interval_join_runtime(spark, sf_dir)
+)(run_interval_join_runtime)
 
 
-@register(
+# The Spark 4 chained-stateful RUNTIME (interval join → downstream
+# tumbling aggregate, two state stores in one query), oracle-gated on
+# the watermark-final window set: every hour bucket older than (max
+# event time − 2 h) must be emitted with the exact batch count.
+# Completes the registered streaming-runtime family with the
+# multi-stateful pipeline shape.
+register(
     "stream_runtime_chained",
     oracle="""
     WITH mx AS (SELECT max(ts) - INTERVAL 2 HOUR AS cutoff FROM events)
@@ -391,16 +385,4 @@ def stream_runtime_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE time_bucket(INTERVAL 1 HOUR, p.ts) < mx.cutoff
     GROUP BY 1
     """,
-)
-def stream_runtime_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark 4 chained-stateful RUNTIME (interval join → downstream
-    tumbling aggregate, two state stores in one query), oracle-gated on
-    the watermark-final window set: every hour bucket older than
-    (max event time − 2 h) must be emitted with the exact batch count.
-    Completes the registered streaming-runtime family with the
-    multi-stateful pipeline shape."""
-    from bishe_gpu_database_spark.streaming.streams import (
-        run_chained_stateful_runtime,
-    )
-
-    return run_chained_stateful_runtime(spark, sf_dir)
+)(run_chained_stateful_runtime)

@@ -11,18 +11,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
-from bishe_gpu_database_spark.operators.relational import _read_parquet, events_ts_to_micros
+from bishe_gpu_database_spark.operators.relational import (
+    _read_parquet,
+    _relayout_path,
+    events_ts_to_micros,
+    t,
+)
 from bishe_gpu_database_spark.session import scoped_conf
 
 
 def events_stream(
     spark: SparkSession, sf_dir: str, *, guard_pre_epoch: bool = True
 ) -> DataFrame:
-    """Replay the events fixture as a file-source stream (one file = one
-    micro-batch with availableNow). Schema comes from the batch read —
+    """Replay the events fixture as a file-source stream over the same
+    re-layout directory ``t(spark, sf_dir, "events")`` scans (written on
+    first use; a failed re-layout raises here, since a file stream cannot
+    read the single fixture file). With availableNow every file of the
+    copy drains as one micro-batch. Schema comes from the batch read —
     streaming file sources require an explicit schema.
 
     ``guard_pre_epoch`` applies the watermark-era ingest guard (see the
@@ -32,35 +39,11 @@ def events_stream(
     batch-twin oracles, which keep pre-1970 rows — stay symmetric with
     the batch read (r8 ADVICE: the guard must not silently narrow paths
     that have no watermark)."""
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = _relayout_path(spark, sf_dir, "events")
     schema = _read_parquet(spark, path).schema
-    # FileStreamSource requires a directory; expose the fixture file
-    # through a symlink dir (read-only testdata stays untouched). The dir
-    # is keyed by a digest of the ABSOLUTE fixture path — basenames
-    # collide across pytest tmp roots ('sf_empty0' recycles every run) —
-    # and a stale/dangling link (lexists but pointing elsewhere or at a
-    # pruned tmp dir) is replaced, never trusted.
-    import hashlib
-
-    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:10]
-    stream_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"events_stream_{os.path.basename(sf_dir.rstrip('/'))}_{digest}",
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, "events.parquet")
-    if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(path):
-        os.unlink(link)
-    if not os.path.lexists(link):
-        os.symlink(path, link)
-    raw = spark.readStream.schema(schema).format("parquet").load(stream_dir)
-    # ts may arrive as raw nanos or a native micros timestamp depending on
-    # the fixture generation — normalize (see operators.relational).
-    out = events_ts_to_micros(raw)
+    # The copy already carries micros timestamps; normalizing anyway keeps
+    # the stream's ts type identical to the batch read's.
+    out = events_ts_to_micros(spark.readStream.schema(schema).parquet(path))
     # PRE-EPOCH ingest guard (r7): a fresh streaming query's event-time
     # watermark initializes at the epoch, so a stateful operator treats a
     # pre-1970 row as late-beyond-horizon ON ARRIVAL and silently drops
@@ -157,18 +140,13 @@ def stream_state_width(spark: SparkSession, sf_dir: str) -> int:
     AQE never coalesces a stateful exchange, so 'let AQE fix it' does
     not apply here and an oversized width is pure per-trigger overhead
     (32 state stores × commit/maintenance for a few-MB fixture replay
-    measured 8.7→2.4 s on the interval-join runtime). Default: one
-    state partition per 64 MB of source, capped at the session width
-    (the cluster deploy knob); ``SPARK_GRAFT_STREAM_PARTITIONS``
-    overrides outright for deployments that size state explicitly.
-    Results are width-invariant — emission sets depend only on event
-    time and watermarks."""
+    measured 8.7→2.4 s on the interval-join runtime). One state
+    partition per 64 MB of source, capped at the session width (the
+    cluster deploy knob). Results are width-invariant — emission sets
+    depend only on event time and watermarks."""
     import math
     import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
     session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
@@ -180,27 +158,28 @@ def stream_state_width(spark: SparkSession, sf_dir: str) -> int:
 def _drain_to_memory(
     spark: SparkSession,
     df: DataFrame,
-    name: str,
+    tag: str,
+    sf_dir: str,
     *,
     checkpoint_location: str | None = None,
-    state_width: int | None = None,
 ) -> DataFrame:
-    """Shared availableNow → memory-sink drain used by every runtime
-    below. When a durable checkpoint is supplied (production restart
-    path), the width guard runs BEFORE the query starts and the session
-    width is kept (a resumed query must match its checkpointed width —
-    ``state_width`` is ignored); ephemeral runs plan their stateful
-    exchanges at ``state_width`` (see stream_state_width)."""
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
+    """The one availableNow → memory-sink drain every runtime below ends
+    in: the sink is named ``stream_rt_<tag>_<fixture>`` and the query
+    has terminated when this returns. Ephemeral runs plan their stateful
+    exchanges at ``stream_state_width``. A durable checkpoint (the
+    production restart path) runs the width guard BEFORE the query
+    starts and keeps the session width, since a resumed query must
+    match its checkpointed width."""
+    import os
+
+    name = f"stream_rt_{tag}_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    spark.catalog.dropTempView(name)
     w = df.writeStream.format("memory").queryName(name).outputMode("append")
+    conf = {"spark.sql.shuffle.partitions": str(stream_state_width(spark, sf_dir))}
     if checkpoint_location is not None:
         assert_checkpoint_width(spark, checkpoint_location)
         w = w.option("checkpointLocation", checkpoint_location)
-        state_width = None
-    conf = {} if state_width is None else {"spark.sql.shuffle.partitions": str(state_width)}
+        conf = {}
     with scoped_conf(spark, conf):
         w.trigger(availableNow=True).start().awaitTermination()
     return spark.table(name)
@@ -221,20 +200,6 @@ def dedup_stream(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming exact dedup by key within the watermark horizon —
     state-store-backed dropDuplicates."""
     return stream.withWatermark("ts", watermark).dropDuplicates(["user_id", "event_type"])
-
-
-def run_to_memory(df: DataFrame, name: str) -> StreamingQuery:
-    """Drain a stream into an in-memory table with availableNow (test/
-    verification harness; production would writeStream to a real sink)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def user_running_totals(stream: DataFrame) -> DataFrame:
@@ -318,15 +283,10 @@ def run_tumbling_runtime(
     correctness-gated, not just its batch twin. A durable
     ``checkpoint_location`` engages the startup width guard
     (assert_checkpoint_width)."""
-    import os
-
-    name = "stream_rt_tumbling_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    stream = events_stream(spark, sf_dir)
-    agg = tumbling_counts(stream, watermark="0 seconds")
+    agg = tumbling_counts(events_stream(spark, sf_dir), watermark="0 seconds")
     return _drain_to_memory(
-        spark, agg, name, checkpoint_location=checkpoint_location,
-        state_width=stream_state_width(spark, sf_dir),
-    ).select("window_start", "event_type", "n_events")
+        spark, agg, "tumbling", sf_dir, checkpoint_location=checkpoint_location
+    )
 
 
 def user_stats_tws(stream: DataFrame) -> DataFrame:
@@ -398,22 +358,12 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def run_session_runtime(
-    spark: SparkSession, sf_dir: str, *, checkpoint_location: str | None = None
-) -> DataFrame:
+def run_session_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the REAL session-window streaming runtime (file replay →
     watermark → session merge state → append emission) and return the
     emitted rows. Emitted set = sessions whose end (last event + gap) ≤
     final watermark (= max event time) — closed-form, SQL-oracle-checkable."""
-    import os
-
-    name = "stream_rt_session_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    stream = events_stream(spark, sf_dir)
-    agg = session_counts(stream)
-    return _drain_to_memory(
-        spark, agg, name, checkpoint_location=checkpoint_location,
-        state_width=stream_state_width(spark, sf_dir),
-    )
+    return _drain_to_memory(spark, session_counts(events_stream(spark, sf_dir)), "session", sf_dir)
 
 
 def sliding_counts(stream: DataFrame, watermark: str = "0 seconds") -> DataFrame:
@@ -428,20 +378,10 @@ def sliding_counts(stream: DataFrame, watermark: str = "0 seconds") -> DataFrame
     )
 
 
-def run_sliding_runtime(
-    spark: SparkSession, sf_dir: str, *, checkpoint_location: str | None = None
-) -> DataFrame:
+def run_sliding_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the REAL sliding-window streaming runtime and return the
     emitted rows (windows whose end ≤ final watermark = max event time)."""
-    import os
-
-    name = "stream_rt_sliding_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    stream = events_stream(spark, sf_dir)
-    agg = sliding_counts(stream)
-    return _drain_to_memory(
-        spark, agg, name, checkpoint_location=checkpoint_location,
-        state_width=stream_state_width(spark, sf_dir),
-    )
+    return _drain_to_memory(spark, sliding_counts(events_stream(spark, sf_dir)), "sliding", sf_dir)
 
 
 def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,8 +389,6 @@ def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer dimension (broadcast hash join per micro-batch — the
     canonical streaming-enrichment plan; the static side is re-resolved
     per batch, the stream side never shuffles)."""
-    from bishe_gpu_database_spark.operators.relational import t
-
     # Stateless path (no watermark): pre-epoch rows are processable here
     # and the batch twin's oracle keeps them — skip the ingest guard so
     # stream and batch semantics stay identical row-for-row.
@@ -465,10 +403,7 @@ def run_enrich_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the stream-static enrichment with availableNow and return
     the emitted rows (append mode: an inner stream-static join emits each
     event exactly once, so the drained sink equals the batch join)."""
-    import os
-
-    name = "stream_rt_enrich_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return _drain_to_memory(spark, enrich_stream(spark, sf_dir), name)
+    return _drain_to_memory(spark, enrich_stream(spark, sf_dir), "enrich", sf_dir)
 
 
 def run_dedup_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,9 +416,6 @@ def run_dedup_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key within the watermark horizon — state ∝ distinct keys in the
     horizon, not history, which is the property that survives 100 TB of
     replayed events."""
-    import os
-
-    name = "stream_rt_dedup_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     stream = events_stream(spark, sf_dir)
     # Watermark horizon longer than the fixture's whole time span: keys
     # stay in state for the full replay, so "every key exactly once"
@@ -496,9 +428,7 @@ def run_dedup_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _drain_to_memory(
-        spark, dd, name, state_width=stream_state_width(spark, sf_dir)
-    ).select("user_id", "event_type")
+    return _drain_to_memory(spark, dd, "dedup", sf_dir)
 
 
 def run_interval_join_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -513,9 +443,6 @@ def run_interval_join_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     side's buffer is bounded by the watermark horizon (1 h of events per
     user key), the reason interval conditions — not unbounded equality
     joins — are THE production stream-stream join."""
-    import os
-
-    name = "stream_rt_ssjoin_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     stream = events_stream(spark, sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
@@ -536,9 +463,7 @@ def run_interval_join_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("event_id").alias("purchase_id"), "user_id", "p_ts", "click_ts"
     )
-    return _drain_to_memory(
-        spark, joined, name, state_width=stream_state_width(spark, sf_dir)
-    )
+    return _drain_to_memory(spark, joined, "ssjoin", sf_dir)
 
 
 def run_chained_stateful_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,9 +479,6 @@ def run_chained_stateful_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark delay (10 m) + window (1 h), rounded up. Those windows
     MUST be emitted with exact counts; later ones are filtered out on
     both sides."""
-    import os
-
-    name = "stream_rt_chained_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     stream = events_stream(spark, sf_dir)
     clicks = (
         stream.filter(F.col("event_type") == "click")
@@ -580,11 +502,7 @@ def run_chained_stateful_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_attributed"))
         .select(F.col("window.start").alias("hour"), "n_attributed")
     )
-    emitted = _drain_to_memory(
-        spark, hourly, name, state_width=stream_state_width(spark, sf_dir)
-    )
-    from bishe_gpu_database_spark.operators.relational import t
-
+    emitted = _drain_to_memory(spark, hourly, "chained", sf_dir)
     cutoff = (
         t(spark, sf_dir, "events")
         .agg((F.max("ts") - F.expr("INTERVAL 2 HOURS")).alias("cutoff"))

@@ -2,8 +2,6 @@
 introduced must be pinned by focused tests (round rule: add a test when
 an optimization changes an operator's internals).
 
-- ``stream_state_width``: the data-derived stateful-exchange width for
-  the fixture-replay streaming runtimes (env override > derived > cap).
 - ``run_batch``'s rewritten fast path: the two existence-probe branches
   (full-key prefetch under ``_KEY_PREFETCH_BOUND`` vs bounded broadcast
   probe above it) must produce identical drains — the same table, the
@@ -30,69 +28,6 @@ from tests.conftest import job_count as _job_count
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_stream_state_width_derivation(spark, monkeypatch, tmp_path):
-    from bishe_gpu_database_spark.streaming.streams import stream_state_width
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
-    session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # A few-KB source derives ONE state partition (the fixture case).
-    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)
-    assert stream_state_width(spark, str(tmp_path)) == 1
-
-    # A source past one 64 MB chunk derives ceil(size/64MB), capped at
-    # the session width (sparse file keeps the test cheap).
-    big = tmp_path / "big"
-    big.mkdir()
-    with open(big / "events.parquet", "wb") as fh:
-        fh.truncate(200 << 20)  # 200 MB -> ceil = 4 partitions
-    assert stream_state_width(spark, str(big)) == min(session_w, 4)
-
-    # Missing source: fall back to the session width (no guess).
-    assert stream_state_width(spark, str(tmp_path / "nope")) == session_w
-
-    # Explicit deployment override wins outright.
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "17")
-    assert stream_state_width(spark, str(tmp_path)) == 17
-
-
-@pytest.mark.parametrize("unset_first", [False, True])
-def test_stream_state_width_restores_session_conf(spark, tmp_path, unset_first):
-    """_drain_to_memory must restore spark.sql.shuffle.partitions even
-    though the drain runs at the derived width — including a width that
-    was unset before, which must come back unset rather than pinned."""
-    from pyspark.sql import functions as F
-
-    from bishe_gpu_database_spark.streaming.streams import _drain_to_memory
-
-    key = "spark.sql.shuffle.partitions"
-    session = spark.conf.get(key, None)
-    try:
-        if unset_first:
-            spark.conf.unset(key)
-        before = spark.conf.get(key, None)
-        src = tmp_path / "stream_src"
-        src.mkdir()
-        spark.range(5).select(
-            F.col("id").alias("k"), F.col("id").cast("double").alias("v")
-        ).coalesce(1).write.mode("overwrite").parquet(str(src))
-        stream = spark.readStream.schema("k bigint, v double").parquet(str(src))
-        dd = stream.dropDuplicates(["k"])  # stateful, append-legal
-        out = _drain_to_memory(
-            spark,
-            dd.select("k"),
-            "r10_width_restore_probe",
-            state_width=2,
-        )
-        assert spark.conf.get(key, None) == before
-        assert len(out.collect()) == 5
-    finally:
-        if session is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, session)
 
 
 @pytest.mark.parametrize("reorder", [True, False])

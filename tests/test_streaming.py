@@ -1,20 +1,30 @@
 """Structured Streaming runtime tests: each stream's availableNow drain
 must equal its oracle-checked batch twin (SURVEY.md §5.2), and the
-foreachBatch Aria driver must equal the batch engine."""
+foreachBatch Aria driver must equal the batch engine. Also pinned here:
+the replay source's pre-epoch ingest guard, the data-derived state width
+and its conf restore, and the checkpoint width guard."""
 
 from __future__ import annotations
+
+import glob
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from bishe_gpu_database_spark.aria.workload import gen_kv, gen_ops, kv_checksum
 from bishe_gpu_database_spark.operators import relational
+from bishe_gpu_database_spark.session import scoped_conf
 from bishe_gpu_database_spark.streaming import streams
 from bishe_gpu_database_spark.streaming.batch_twins import stream_tumbling_window
 from tests.conftest import SF_SMALL
 
 
 def _drain_to_rows(spark, df, name, mode="append"):
+    """The tests' one memory-sink drain (the engine's ``_drain_to_memory``
+    is append-only; these tests also need update mode): availableNow into
+    memory table ``name``; returns the table and the query's last
+    progress."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -23,7 +33,7 @@ def _drain_to_rows(spark, df, name, mode="append"):
         .start()
     )
     q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return spark.table(name), q.lastProgress
 
 
 def test_tumbling_stream_equals_batch_twin(spark):
@@ -32,7 +42,7 @@ def test_tumbling_stream_equals_batch_twin(spark):
     # emits only closed windows; use update-free aggregation into memory
     # with watermark far in the past so every window closes at end-of-data.
     agg = streams.tumbling_counts(stream, watermark="0 seconds")
-    got = _drain_to_rows(spark, agg, "tumbling_test")
+    got, _ = _drain_to_rows(spark, agg, "tumbling_test")
     # Append mode emits a window only once the watermark passes its end;
     # the window containing the final event never closes — exclude it.
     max_ts = (
@@ -54,7 +64,7 @@ def test_tumbling_stream_equals_batch_twin(spark):
 def test_stream_dedup_matches_batch_distinct(spark):
     stream = streams.events_stream(spark, SF_SMALL)
     deduped = streams.dedup_stream(stream, watermark="365 days")
-    got = _drain_to_rows(spark, deduped, "dedup_test")
+    got, _ = _drain_to_rows(spark, deduped, "dedup_test")
     n_got = got.select("user_id", "event_type").distinct().count()
     assert got.count() == n_got  # one row per key survived
     batch_n = (
@@ -74,7 +84,7 @@ def test_dedup_within_watermark(spark):
     deduped = stream.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
-    got = _drain_to_rows(spark, deduped, "dedup_wm_test")
+    got, _ = _drain_to_rows(spark, deduped, "dedup_wm_test")
     # Within one availableNow batch every (user,type) key dedupes to one
     # survivor per watermark horizon — never more rows than exact distinct
     # over horizon-sized buckets, never fewer than global distinct.
@@ -90,7 +100,7 @@ def test_dedup_within_watermark(spark):
 
 def test_stateful_running_totals_match_batch(spark):
     stream = streams.events_stream(spark, SF_SMALL)
-    got = _drain_to_rows(
+    got, _ = _drain_to_rows(
         spark, streams.user_running_totals(stream), "stateful_test", mode="update"
     )
     # Update mode with one availableNow batch → one row per user, holding
@@ -127,7 +137,7 @@ def test_stream_stream_interval_join_matches_batch(spark):
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("event_id", "c_ts")
-    got = _drain_to_rows(spark, joined, "ssjoin_test")
+    got, _ = _drain_to_rows(spark, joined, "ssjoin_test")
 
     e = relational.events_ts_to_micros(spark.read.parquet(f"{SF_SMALL}/events.parquet"))
     bc = e.filter(F.col("event_type") == "click").select(
@@ -148,10 +158,7 @@ def test_python_datasource_matches_workload_gen(spark):
     rows to the JVM-side workload generator (same md5 derivation)."""
     from bishe_gpu_database_spark.sources.ycsb_source import YcsbDataSource
 
-    try:
-        spark.dataSource.register(YcsbDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(YcsbDataSource)
     src = (
         spark.read.format("ycsb")
         .option("n_keys", 200)
@@ -205,15 +212,8 @@ def test_watermark_drops_late_rows(spark):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("string").alias("ws"), "n")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["ws"]: r["n"] for r in spark.sql("SELECT * FROM late_test").collect()}
+    rows, _ = _drain_to_rows(spark, agg, "late_test")
+    got = {r["ws"]: r["n"] for r in rows.collect()}
     # The 00:00 window closed with exactly ONE row; the late row was dropped.
     assert got.get("2024-01-01 00:00:00") == 1, got
 
@@ -230,10 +230,7 @@ def test_ycsb_txn_stream_drives_aria(spark):
         txn_batch_rows,
     )
 
-    try:
-        spark.dataSource.register(YcsbTxnStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(YcsbTxnStreamDataSource)
     opts = dict(n_txns=10, max_ops=4, n_keys=50, write_pct=50, seed="cap", max_batches=2)
 
     kv0 = gen_kv(spark, 50, seed="cap_kv")
@@ -308,7 +305,7 @@ def test_transform_with_state_matches_batch(spark):
     doesn't ship — skip there; runs on any standard Spark 4 install."""
     pytest.importorskip("google.protobuf")
     stream = streams.events_stream(spark, SF_SMALL)
-    got = _drain_to_rows(
+    got, _ = _drain_to_rows(
         spark, streams.user_stats_tws(stream), "tws_test", mode="update"
     )
     latest = {r["user_id"]: (r["n_events"], r["total_cents"]) for r in got.collect()}
@@ -365,7 +362,7 @@ def test_stream_stream_outer_interval_join_emits_nulls(spark):
         & (F.col("c_ts") <= F.col("p_ts")),
         "leftOuter",
     ).select("event_id", "c_ts")
-    got = _drain_to_rows(spark, joined, "ssjoin_outer_test")
+    got, _ = _drain_to_rows(spark, joined, "ssjoin_outer_test")
 
     e = relational.events_ts_to_micros(spark.read.parquet(f"{SF_SMALL}/events.parquet"))
     bc = e.filter(F.col("event_type") == "click").select(
@@ -408,42 +405,22 @@ def test_rocksdb_state_store_matches_default(spark):
     stateful aggregation."""
     stream = streams.events_stream(spark, SF_SMALL)
     agg = streams.tumbling_counts(stream, watermark="0 seconds")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
     prov = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
     # The provider is a SESSION conf, not a writeStream option — an
     # .option() here is silently ignored and the test would compare the
     # default provider against itself.
-    try:
-        old = spark.conf.get(conf_key)
-    except Exception:
-        old = None
-    spark.conf.set(conf_key, prov)
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("rocksdb_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = q.lastProgress
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": prov}):
+        rows, progress = _drain_to_rows(spark, agg, "rocksdb_test")
     # prove RocksDB actually ran (its custom metrics appear in progress)
     assert "rocksdb" in str(progress).lower()
     got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM rocksdb_test").collect()
+        (r["window_start"], r["event_type"]): r["n_events"] for r in rows.collect()
     }
     ref = {
         (r["window_start"], r["event_type"]): r["n_events"]
-        for r in _drain_to_rows(spark, agg, "rocksdb_ref").collect()
+        for r in _drain_to_rows(spark, agg, "rocksdb_ref")[0].collect()
     }
     assert got == ref and len(got) > 0
 
@@ -537,7 +514,7 @@ def test_chained_stateful_join_then_window_agg(spark):
         .agg(F.count(F.lit(1)).alias("n_attributed"))
         .select(F.col("window.start").alias("hour"), "n_attributed")
     )
-    got = _drain_to_rows(spark, hourly, "chained_stateful_test")
+    got, _ = _drain_to_rows(spark, hourly, "chained_stateful_test")
 
     e = relational.events_ts_to_micros(
         spark.read.parquet(f"{SF_SMALL}/events.parquet")
@@ -581,3 +558,190 @@ def test_chained_stateful_join_then_window_agg(spark):
     got_all = {(r.hour, r.n_attributed) for r in got.collect()}
     want_all = {(r.hour, r.n_attributed) for r in batch.collect()}
     assert got_all <= want_all
+
+
+# -- Pre-epoch ingest guard ------------------------------------------------
+# A fresh streaming query's event-time watermark initializes at the epoch,
+# so a watermarked stateful operator drops a pre-1970 row as
+# late-beyond-horizon ON ARRIVAL — engine-internal behavior an oracle
+# cannot model portably. events_stream therefore filters ts >= 1970-01-01
+# explicitly (symmetric with the runtime oracles); the BATCH read keeps
+# every row. Surfaced by the perturbed-fixture timestamp axis
+# (`scripts/sweep.py perturbed`).
+
+PRE_ID = 990001  # 1969-12-31 23:30:00 — pre-epoch, negative unix micros
+POST_ID = 990002  # 1970-01-01 00:00:00.000001 — 1 µs past the epoch
+
+
+def _mini_fixture(spark, tmp_path) -> str:
+    base = spark.read.parquet(f"{SF_SMALL}/events.parquet").limit(3)
+    first = base.limit(1)
+    extra = first.select(
+        F.lit(PRE_ID).alias("event_id"),
+        F.to_timestamp(F.lit("1969-12-31 23:30:00")).alias("ts"),
+        F.lit(PRE_ID).cast("long").alias("user_id"),
+        "event_type",
+        F.lit(1.0).alias("value"),
+        "props",
+    ).unionByName(
+        first.select(
+            F.lit(POST_ID).alias("event_id"),
+            F.to_timestamp(F.lit("1970-01-01 00:00:00.000001")).alias("ts"),
+            F.lit(POST_ID).cast("long").alias("user_id"),
+            "event_type",
+            F.lit(2.0).alias("value"),
+            "props",
+        )
+    )
+    out = tmp_path / "evw"
+    base.unionByName(extra).coalesce(1).write.parquet(str(out))
+    part = glob.glob(str(out / "part-*.parquet"))[0]
+    # the fixture layout expects events.parquet as a single FILE
+    shutil.copy(part, str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+def test_stream_guards_pre_epoch_batch_keeps_it(spark, tmp_path):
+    sf_dir = _mini_fixture(spark, tmp_path)
+
+    stream = streams.events_stream(spark, sf_dir)
+    rows, _ = _drain_to_rows(spark, stream.select("event_id"), "r7_guard_test")
+    streamed = {r[0] for r in rows.collect()}
+
+    batch = {r[0] for r in relational.t(spark, sf_dir, "events").select("event_id").collect()}
+
+    assert PRE_ID not in streamed  # unprocessable by any watermarked stream
+    assert POST_ID in streamed  # epoch+1µs is watermark-era data
+    assert PRE_ID in batch and POST_ID in batch  # batch semantics untouched
+    assert streamed == batch - {PRE_ID}
+
+
+def test_stateless_path_keeps_pre_epoch(spark, tmp_path):
+    """The guard is scoped to watermarked consumers. A stateless runtime
+    (no watermark — e.g. the stream-static enrich join) opts out via
+    guard_pre_epoch=False and must see EVERY row the batch read sees,
+    pre-epoch included, so its batch-twin oracle (which keeps pre-1970
+    rows) never diverges from the runtime."""
+    sf_dir = _mini_fixture(spark, tmp_path)
+
+    stream = streams.events_stream(spark, sf_dir, guard_pre_epoch=False)
+    rows, _ = _drain_to_rows(spark, stream.select("event_id"), "r8_stateless_guard_test")
+    streamed = {r[0] for r in rows.collect()}
+
+    batch = {r[0] for r in relational.t(spark, sf_dir, "events").select("event_id").collect()}
+
+    assert PRE_ID in streamed and POST_ID in streamed
+    assert streamed == batch
+
+
+# -- State width: derived from the source, scoped, guarded on resume -------
+
+
+def test_stream_state_width_derivation(spark, tmp_path):
+    session_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    # A few-KB source derives ONE state partition (the fixture case).
+    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)
+    assert streams.stream_state_width(spark, str(tmp_path)) == 1
+
+    # A source past one 64 MB chunk derives ceil(size/64MB), capped at
+    # the session width (sparse file keeps the test cheap).
+    big = tmp_path / "big"
+    big.mkdir()
+    with open(big / "events.parquet", "wb") as fh:
+        fh.truncate(200 << 20)  # 200 MB -> ceil = 4 partitions
+    assert streams.stream_state_width(spark, str(big)) == min(session_w, 4)
+
+    # Missing source: fall back to the session width (no guess).
+    assert streams.stream_state_width(spark, str(tmp_path / "nope")) == session_w
+
+
+@pytest.mark.parametrize("unset_first", [False, True])
+def test_stream_state_width_restores_session_conf(spark, tmp_path, unset_first):
+    """_drain_to_memory must restore spark.sql.shuffle.partitions even
+    though the drain runs at the derived width — including a width that
+    was unset before, which must come back unset rather than pinned."""
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key, None)
+    try:
+        if unset_first:
+            spark.conf.unset(key)
+        before = spark.conf.get(key, None)
+        src = tmp_path / "stream_src"
+        src.mkdir()
+        spark.range(5).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+        ).coalesce(1).write.mode("overwrite").parquet(str(src))
+        stream = spark.readStream.schema("k bigint, v double").parquet(str(src))
+        dd = stream.dropDuplicates(["k"])  # stateful, append-legal
+        # SF_SMALL's events file derives width 1, not the session's.
+        out = streams._drain_to_memory(spark, dd.select("k"), "width_restore_probe", SF_SMALL)
+        assert spark.conf.get(key, None) == before
+        assert len(out.collect()) == 5
+    finally:
+        if session is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, session)
+
+
+def test_width_guard_fires_on_mismatch_and_passes_on_match(spark, sf_dir, tmp_path):
+    """Spark persists ``spark.sql.shuffle.partitions`` into a stateful
+    query's checkpoint (state-store count == partition count; state
+    cannot be repartitioned later) and on restart silently KEEPS the
+    checkpointed width. ``streams.assert_checkpoint_width`` turns that
+    into a loud startup error with remediation."""
+    ckpt = str(tmp_path / "ckpt_tumbling")
+    width0 = spark.conf.get("spark.sql.shuffle.partitions")
+
+    # fresh checkpoint: nothing pinned yet, guard is a no-op
+    assert streams.assert_checkpoint_width(spark, ckpt) is None
+
+    # first run commits offsets that pin the session width
+    streams.run_tumbling_runtime(spark, sf_dir, checkpoint_location=ckpt)
+    assert streams.assert_checkpoint_width(spark, ckpt) == int(width0)
+
+    # deliberately mismatch the session width: the guard must fail with
+    # remediation BEFORE the query would start
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(int(width0) + 7))
+        with pytest.raises(streams.CheckpointWidthMismatch, match="fresh checkpoint"):
+            streams.assert_checkpoint_width(spark, ckpt)
+        # the runtime helper itself runs the guard when resuming
+        with pytest.raises(streams.CheckpointWidthMismatch):
+            streams.run_tumbling_runtime(spark, sf_dir, checkpoint_location=ckpt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width0)
+
+    # width restored: resume is allowed again
+    assert streams.assert_checkpoint_width(spark, ckpt) == int(width0)
+
+
+# -- One replay source, one drain ------------------------------------------
+
+
+def test_runtimes_leave_no_query_or_width_behind(spark):
+    """Every registered streaming runtime, and the enrich runtime, has
+    terminated its query and put the session width back when it
+    returns."""
+    from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
+
+    _ensure_loaded()
+    runtimes = [
+        spec.fn for name, spec in sorted(REGISTRY.items()) if name.startswith("stream_runtime_")
+    ]
+    assert len(runtimes) == 6
+    key = "spark.sql.shuffle.partitions"
+    for fn in [*runtimes, streams.run_enrich_runtime]:
+        before = spark.conf.get(key, None)
+        fn(spark, SF_SMALL).collect()
+        assert spark.streams.active == [], fn.__name__
+        assert spark.conf.get(key, None) == before, fn.__name__
+
+
+def test_events_stream_replays_the_relayout_copy(spark):
+    """events_stream reads exactly the files t(..., "events") scans."""
+    scanned = set(relational.t(spark, SF_SMALL, "events").inputFiles())
+    stream = streams.events_stream(spark, SF_SMALL, guard_pre_epoch=False)
+    rows, _ = _drain_to_rows(spark, stream.select(F.input_file_name().alias("f")), "replay_files")
+    assert {r.f for r in rows.collect()} == scanned
