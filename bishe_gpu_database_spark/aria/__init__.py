@@ -6,4 +6,4 @@ table is an immutable DataFrame (free snapshot isolation), reservations
 are min-Tid aggregates, and the retry loop is driver-side.
 """
 
-from bishe_gpu_database_spark.aria.engine import AriaEpochResult, aria_epoch, run_batch  # noqa: F401
+from bishe_gpu_database_spark.aria.engine import run_batch  # noqa: F401

@@ -32,8 +32,6 @@ ref: src/cuda/hashTable.cuh:165-200).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -45,44 +43,26 @@ from bishe_gpu_database_spark.session import scoped_conf
 _KEY_PREFETCH_BOUND = 1_000_000
 
 
-@dataclass
-class AriaEpochResult:
-    kv: DataFrame  # table after install
-    verdicts: DataFrame  # tid, raw, war, waw, committed
-    aborted_ops: DataFrame  # ops of aborted txns (same schema as input ops)
-
-
-def analyze_dependencies(
-    ops: DataFrame, kv: DataFrame, *, insert_missing: bool = False
-) -> DataFrame:
+def analyze_dependencies(ops: DataFrame, kv: DataFrame) -> DataFrame:
     """Execute + Reserve + Commit: per-tid (raw, war, waw) flags.
 
     ``ops`` columns: tid, seq, k, is_update, new_* staged values.
     ``kv`` columns:  k, <value columns>.
-
-    ``insert_missing=True`` is the reference's op-parallel Execute, which
-    inserts absent keys on the fly instead of skipping the op
-    (ref: src/database/ycsb/operation_parallel.cuh:72-83): every op then
-    participates in reservation/dependency analysis.
     """
-    # Execute: snapshot probe. Ops on missing keys are skipped exactly like
-    # the reference's failed hash probe. Join direction is the scale
-    # contract: the TABLE is the unbounded side (100 TB design point) while
-    # the ops batch is capacity-bounded (ref: TransctionManager.cuh:15), so
-    # the batch is broadcast and the table streams — no table-sized shuffle,
-    # and the epoch loop (which runs this with AQE off) can never fall back
-    # to a sort-merge join of the whole key set. kv keys are unique (it is
-    # the keyed table), so the inner join returns each found op once.
-    if insert_missing:
-        # NULL keys can slip in from caller-constructed ops; the probe
-        # branch drops them via the equi-join, and the reference has no
-        # NULL key either — keep both branches' semantics identical
-        # (the per-key window below would otherwise group all NULLs
-        # into one phantom key and conflict them against each other).
-        found = ops.filter(F.col("k").isNotNull())
-    else:
-        found = kv.select("k").join(F.broadcast(ops), "k", "inner")
-    return _flags_from_found(found)
+    return _flags_from_found(_probe(kv, ops))
+
+
+def _probe(kv: DataFrame, ops: DataFrame) -> DataFrame:
+    """Execute's snapshot probe: the ops whose key exists in ``kv``. Ops
+    on missing keys are skipped exactly like the reference's failed hash
+    probe (ref: TrancM_func.cuh:32-34). Join direction is the scale
+    contract: the TABLE is the unbounded side (100 TB design point) while
+    the ops batch is capacity-bounded (ref: TransctionManager.cuh:15), so
+    the batch is broadcast and the table streams — no table-sized
+    shuffle, and the epoch loop (which runs with AQE off) can never fall
+    back to a sort-merge join of the whole key set. kv keys are unique
+    (it is the keyed table), so each found op comes back once."""
+    return kv.select("k").join(F.broadcast(ops), "k", "inner")
 
 
 def _flags_from_found(found: DataFrame) -> DataFrame:
@@ -126,19 +106,6 @@ def _abort_cond(reorder: bool):
     return F.col("waw") | F.col("raw")
 
 
-def _last_writes(writes: DataFrame, value_cols: list[str]) -> DataFrame:
-    """Per key, the committed write that installs: WAW-freedom leaves one
-    committed writer per key, and within it the last write (max seq) wins
-    (ref: src/database/ycsb/key_op_chain.cuh:161-189). The smallest-tid
-    tiebreak only matters for the NULL-key group under insert_missing."""
-    w = W.partitionBy("k").orderBy(F.col("tid").asc(), F.col("seq").desc())
-    return (
-        writes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("k", *[F.col(f"new_{c}").alias(c) for c in value_cols])
-    )
-
-
 def _overlay(base: DataFrame, winners: dict | DataFrame) -> DataFrame:
     """The install merge ``base ⟕ delta ∪ delta`` (lazy): each delta row
     replaces its key's base row. A driver-held delta — ``{k: value
@@ -161,44 +128,6 @@ def _overlay(base: DataFrame, winners: dict | DataFrame) -> DataFrame:
     return base.join(winners, "k", "left_anti").unionByName(winners)
 
 
-def aria_epoch(
-    kv: DataFrame,
-    ops: DataFrame,
-    *,
-    reorder: bool = True,
-    insert_missing: bool = False,
-) -> AriaEpochResult:
-    """One Aria epoch: Execute → Commit → Install, returning the new table
-    and per-transaction verdicts. Value columns are inferred from kv
-    (everything but k); ops must carry matching ``new_<col>`` columns.
-    ``insert_missing`` switches Execute to the reference's op-parallel
-    insert-on-miss variant (see analyze_dependencies)."""
-    value_cols = [c for c in kv.columns if c != "k"]
-
-    flags = analyze_dependencies(ops, kv, insert_missing=insert_missing)
-    verdicts = flags.withColumn("committed", ~_abort_cond(reorder))
-
-    committed_tids = verdicts.filter(F.col("committed")).select("tid")
-
-    # Install: staged writes of committed txns. The key must exist in the
-    # snapshot (missing-key ops were skipped at Execute).
-    writes = ops.filter(F.col("is_update")).join(
-        F.broadcast(committed_tids), "tid", "left_semi"
-    )
-    if not insert_missing:
-        # Only pre-existing keys are writable (missing-key ops skipped at
-        # Execute); with insert_missing the write creates the key. Same
-        # broadcast direction as the probe: stream the table, broadcast
-        # the bounded batch.
-        writes = kv.select("k").join(F.broadcast(writes), "k", "inner")
-    new_kv = _overlay(kv, _last_writes(writes, value_cols))
-
-    aborted_ops = ops.join(
-        F.broadcast(verdicts.filter(~F.col("committed")).select("tid")), "tid", "left_semi"
-    )
-    return AriaEpochResult(kv=new_kv, verdicts=verdicts, aborted_ops=aborted_ops)
-
-
 def run_batch(
     kv: DataFrame,
     ops: DataFrame,
@@ -213,6 +142,11 @@ def run_batch(
     outer loop ref: src/database/ycsb/db.h:104-109). Returns (final kv
     DataFrame, per-epoch stats); the final table is a lazy
     ``base ⟕ delta ∪ delta`` merge evaluated by the caller.
+    ``max_epochs=1`` is one Execute → Commit → Install epoch.
+    ``insert_missing=True`` is the reference's op-parallel Execute, which
+    inserts absent keys on the fly instead of skipping the op
+    (ref: src/database/ycsb/operation_parallel.cuh:72-83): every op with
+    a non-NULL key then takes part in reservation and dependency analysis.
 
     One bounded collect (``_collect_batch``) reads the batch. When it
     fits ``driver_sim_threshold`` op rows — legal to hold driver-side
@@ -233,8 +167,8 @@ def run_batch(
     once at the end — epoch cost is two shuffles of the batch, never the
     table. The reference instead round-trips the whole table through the
     GPU every epoch (ref: src/database/ycsb/db.h:111-125). Both paths are
-    pinned bit-identical by tests/test_r7_aria_fastpath.py and the
-    hypothesis serial-oracle suite."""
+    pinned bit-identical by tests/test_aria.py and the hypothesis
+    serial-oracle suite."""
     new_cols = [f"new_{c}" for c in kv.columns if c != "k"]
     rows = _collect_batch(ops, new_cols, driver_sim_threshold)
     if len(rows) > driver_sim_threshold:
@@ -365,7 +299,7 @@ def _drain_distributed(
         # ONCE here and fused into the checkpointed batch instead of being
         # re-probed every epoch — one fewer broadcast build + probe stage
         # in every epoch of the drain.
-        ops0 = base.select("k").join(F.broadcast(ops0), "k", "inner").localCheckpoint()
+        ops0 = _probe(base, ops0).localCheckpoint()
     # Size the drain's exchanges to the BATCH, not the cluster: capacity is
     # bounded (the reference caps in-flight txns at 200, ref:
     # TransctionManager.cuh:15), so the per-epoch flags job moves a few
@@ -412,7 +346,6 @@ def _sim_schedule(
     for epoch in range(1, max_epochs + 1):
         if not cur:
             break
-        n_txns = len(cur)
         live = [(t, k, u) for (t, k, u) in op_rows if t in cur]
         rts: dict = {}
         wts: dict = {}
@@ -435,23 +368,32 @@ def _sim_schedule(
             t: not ((f[2] or (f[0] and f[1])) if reorder else (f[2] or f[0]))
             for t, f in flags.items()
         }
-        aborted = sorted(t for t, c in verd.items() if not c)
         for t, c in verd.items():
             if c:
                 tid_epoch[t] = epoch
-        stats.append(
-            {
-                "epoch": epoch,
-                "n_txns": n_txns,
-                "n_committed": n_txns - len(aborted),
-                "n_aborted": len(aborted),
-                "verdicts": sorted(({t: True for t in cur} | verd).items()),
-            }
-        )
-        if not aborted:
+        stats.append(_epoch_stats(epoch, cur, verd))
+        if not stats[-1]["n_aborted"]:
             break
-        cur = set(aborted)
+        cur = {t for t, c in verd.items() if not c}
     return stats, tid_epoch
+
+
+def _epoch_stats(epoch: int, cur: set, verd: dict) -> dict:
+    """One epoch's stats record over the in-flight tids ``cur`` and the
+    {tid: committed} verdicts of those that had ops to analyze. Its
+    ``verdicts`` are the drain SCHEDULE — per-epoch (original tid →
+    verdict), the thing Aria determinizes, hash-gated by
+    aria_drain_schedule against an unrolled SQL oracle. A pending tid
+    with no flag row (every op targeted a missing key) trivially commits
+    and is recorded, so the schedule covers the whole in-flight set."""
+    n_aborted = sum(1 for c in verd.values() if not c)
+    return {
+        "epoch": epoch,
+        "n_txns": len(cur),
+        "n_committed": len(cur) - n_aborted,
+        "n_aborted": n_aborted,
+        "verdicts": sorted(({t: True for t in cur} | verd).items()),
+    }
 
 
 class StreamDrainState:
@@ -578,7 +520,7 @@ def stream_drain_step(
     the memtable and take ``_drain_distributed`` on base0 (the
     key-existence cache stays valid: the key set is static under
     insert_missing=False). Pinned by tests/test_streaming.py and
-    tests/test_r8_stream_fastpath.py."""
+    tests/test_aria.py."""
     new_cols = [f"new_{c}" for c in state.value_cols]
     rows = _collect_batch(ops, new_cols, driver_sim_threshold)
     if not rows:
@@ -619,7 +561,6 @@ def _drain_loop(
     for epoch in range(1, max_epochs + 1):
         if not cur:
             break
-        n_txns = len(cur)
         # The reference's Collect phase densely re-numbers retried tids
         # (TransctionManager.cuh:176-184) because its arrays are indexed
         # by tid. The analysis itself only ever COMPARES tids (wts < tid,
@@ -638,59 +579,41 @@ def _drain_loop(
         flags = _flags_from_found(ops_e.filter(F.col("k").isNotNull()))
         verd = {r["tid"]: not r["abort"] for r in
                 flags.select("tid", _abort_cond(reorder).alias("abort")).collect()}
-        aborted_tids = sorted(tid for tid, committed in verd.items() if not committed)
-        committed_tids = [t for t, c in verd.items() if c]
-        n_aborted = len(aborted_tids)
-
         # Install from the LITERAL committed-tid list — the verdict subtree
-        # (two shuffles) is not recomputed for the table materialization.
-        # Everything below stays LAZY: the delta is only ever read by the
-        # final merged plan (or by the next epoch's anti-join, itself lazy),
-        # so installs cost zero jobs during the drain.
-        # ops_e is pre-probed, so every write targets an existing key (or,
-        # with insert-on-miss, legitimately creates one) — no per-epoch
-        # key-existence join.
-        writes = ops_e.filter(F.col("is_update") & F.col("tid").isin(committed_tids))
-        last_writes = _last_writes(writes, value_cols)
-        # Delta bookkeeping: APPEND-only. The obvious formulation — fold
-        # each epoch's writes into a running anti-join+union delta — makes
-        # the lazy plan one level deeper per epoch, and since PySpark
-        # analyzes eagerly on construction, epoch e pays O(e) driver-side
-        # analysis (measured ~0.1 s by epoch 9). Tagging each epoch's
-        # writes and resolving newest-epoch-wins ONCE after the loop keeps
-        # per-epoch driver work flat.
-        epoch_writes.append(last_writes.withColumn("_install_epoch", F.lit(epoch)))
-
-        stats.append(
-            {
-                "epoch": epoch,
-                "n_txns": n_txns,
-                "n_committed": n_txns - n_aborted,
-                "n_aborted": n_aborted,
-                # The drain SCHEDULE — per-epoch (original tid → verdict),
-                # the thing Aria determinizes; hash-gated by
-                # aria_drain_schedule against an unrolled SQL oracle.
-                # Pending tids with NO flag row (every op targeted a
-                # missing key) trivially commit — recorded explicitly so
-                # the schedule covers the whole in-flight set.
-                "verdicts": sorted(({t: True for t in cur} | verd).items()),
-            }
+        # (two shuffles) is not recomputed. The writes stay LAZY and
+        # APPEND-only: folding each epoch into a running anti-join+union
+        # delta would deepen the plan per epoch, and since PySpark
+        # analyzes eagerly on construction, epoch e would pay O(e)
+        # driver-side analysis (measured ~0.1 s by epoch 9). ops0 is
+        # pre-probed, so every write targets an existing key (or, with
+        # insert-on-miss, legitimately creates one).
+        committed = [t for t, c in verd.items() if c]
+        epoch_writes.append(
+            ops0.filter(F.col("is_update") & F.col("tid").isin(committed))
+            .withColumn("_install_epoch", F.lit(epoch))
         )
-        if n_aborted == 0:
+        stats.append(_epoch_stats(epoch, cur, verd))
+        if not stats[-1]["n_aborted"]:
             break
-        cur = set(aborted_tids)
+        cur = {t for t, c in verd.items() if not c}
     if not epoch_writes:
         return stats, None
-    # Newest-epoch-wins merge of all install deltas, resolved in ONE flat
-    # plan (union width = drain length ≤ max_epochs, evaluated once by
-    # the caller's final merge — never during the loop).
+    # Each key's install winner, resolved ONCE in one flat plan (union
+    # width = drain length ≤ max_epochs, evaluated by the caller's final
+    # merge — never during the loop): newest epoch, then smallest tid,
+    # then largest seq, the order _drain_rows picks by. WAW-freedom leaves
+    # one committed writer per key per epoch, whose last write (max seq)
+    # wins (ref: src/database/ycsb/key_op_chain.cuh:161-189); the tid
+    # tiebreak only matters for the NULL-key group under insert_missing.
     allw = epoch_writes[0]
     for ew in epoch_writes[1:]:
         allw = allw.unionByName(ew)
-    wd = W.partitionBy("k").orderBy(F.col("_install_epoch").desc())
+    wd = W.partitionBy("k").orderBy(
+        F.col("_install_epoch").desc(), F.col("tid").asc(), F.col("seq").desc()
+    )
     delta = (
         allw.withColumn("_rn", F.row_number().over(wd))
         .filter(F.col("_rn") == 1)
-        .select("k", *value_cols)
+        .select("k", *[F.col(f"new_{c}").alias(c) for c in value_cols])
     )
     return stats, delta

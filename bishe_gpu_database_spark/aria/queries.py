@@ -302,17 +302,17 @@ def aria_install_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     events-derived batch (reorder policy). This is the epoch-versioned
     snapshot read — the multi-version view the reference materializes by
     memcpy-ing the whole table per epoch (ref: src/database/ycsb/
-    db.h:111-125) — and the only ORACLE-checked path through install:
-    the drain query covers it rows-only, the property suite vs a serial
-    oracle, this one bit-for-bit vs SQL. Values are portable md5-derived
+    db.h:111-125). The epoch is ``run_batch`` stopped after one epoch and
+    forced onto the distributed epoch loop (``driver_sim_threshold=0``),
+    so this oracle checks that loop's install bit-for-bit against SQL,
+    while the drain queries (``aria_drain_final_state`` and the streamed
+    twins) check the driver-side install. Values are portable md5-derived
     strings so both engines compute identical bytes. Install is an
     anti-join + union of the committed delta: at 100 TB epoch cost is
     delta-sized, never table-sized (ref write-back:
     src/database/ycsb/TrancM_func.cuh:188-198)."""
-    from bishe_gpu_database_spark.aria.engine import aria_epoch
-
     base, ops = _md5_base_and_ops(spark, sf_dir)
-    return aria_epoch(base, ops, reorder=True).kv
+    return run_batch(base, ops, reorder=True, max_epochs=1, driver_sim_threshold=0)[0]
 
 
 @register(
@@ -406,7 +406,7 @@ def aria_stream_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     original-tid order — so the final table is last-writer-wins by
     (batch DESC, tid DESC, seq DESC) per key over the initial snapshot.
     This upgrades the memtable carry path from pytest-pinned
-    (tests/test_r8_stream_fastpath.py) to driver-oracle-gated like the
+    (tests/test_aria.py) to driver-oracle-gated like the
     batch drain (``aria_drain_final_state``)."""
     from bishe_gpu_database_spark.aria.engine import StreamDrainState, stream_drain_step
 

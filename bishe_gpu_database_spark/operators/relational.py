@@ -63,15 +63,17 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     TIMESTAMP, and mixed-type comparisons would otherwise lurk)."""
     from pyspark.sql.types import TimestampNTZType
 
-    casts = [
-        F.col(f.name).cast("timestamp").alias(f.name)
-        if isinstance(f.dataType, TimestampNTZType)
-        else F.col(f.name)
-        for f in df.schema.fields
-    ]
-    if any(isinstance(f.dataType, TimestampNTZType) for f in df.schema.fields):
-        return df.select(casts)
-    return df
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, TimestampNTZType) for f in fields):
+        return df
+    return df.select(
+        [
+            F.col(f.name).cast("timestamp").alias(f.name)
+            if isinstance(f.dataType, TimestampNTZType)
+            else F.col(f.name)
+            for f in fields
+        ]
+    )
 
 
 # The session confs that change the schema Spark infers from a parquet
