@@ -147,7 +147,7 @@ def _bucketed_candidates(p: DataFrame, directed: bool) -> DataFrame:
     ``directed`` keeps both orientations (u ≠ v, for per-point kNN),
     otherwise each unordered pair appears once (u < v). Shared by
     geo_neighbor_pairs / geo_knn_within_radius and property-tested on
-    cell-boundary straddlers in tests/test_r3_ops.py."""
+    cell-boundary straddlers in tests/test_exact_ops.py."""
     home = p.select(
         F.col("k").alias("v_k"),
         F.col("x").alias("v_x"),

@@ -19,8 +19,13 @@ shuffles land, and why the plan survives a 1000-executor cluster.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import logging
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -87,14 +92,19 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
-def _schema_key(spark: SparkSession, path: str) -> tuple:
-    """What a footer-inferred schema depends on: the path, the file's (or
-    a written-once directory's ``_SUCCESS`` marker's) size and mtime, and
-    the schema-inference confs in effect."""
+def _fingerprint(path: str) -> tuple[int, int]:
+    """``(st_size, st_mtime_ns)`` of a parquet file, or of a written-once
+    directory's ``_SUCCESS`` marker."""
     marker = os.path.join(path, "_SUCCESS") if os.path.isdir(path) else path
     st = os.stat(marker)
+    return st.st_size, st.st_mtime_ns
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """What a footer-inferred schema depends on: the path, its
+    ``_fingerprint`` and the schema-inference confs in effect."""
     confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    return (path, st.st_size, st.st_mtime_ns, confs)
+    return (path, *_fingerprint(path), confs)
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -119,62 +129,86 @@ def _raw_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _ntz_to_ltz(_read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet")))
 
 
+# The one scratch root: every copy the engine derives from a fixture,
+# and every sink's output, lives under it.
+_SCRATCH = os.path.join(tempfile.gettempdir(), "bishe_spark_scratch")
+
+
+def _copy_stem(sf_dir: str, tag: str) -> str:
+    """``tag``, the fixture's basename and a short hash of its absolute
+    path: two fixture dirs that share a basename never share a copy."""
+    sf = os.path.abspath(sf_dir)
+    base = os.path.basename(sf).replace(".", "_")
+    return f"{tag}_{base}_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
+
+
+def copy_name(sf_dir: str, source: str, tag: str) -> str:
+    """The name of the copy ``tag`` derives from fixture table ``source``:
+    its stem plus the source parquet's ``_fingerprint``, so a rewritten
+    fixture names a new copy instead of serving the old one."""
+    size, mtime = _fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
+    return f"{_copy_stem(sf_dir, tag)}_{size}_{mtime}"
+
+
+def derived_copy(sf_dir: str, source: str, tag: str, build: Callable[[str], None]) -> str:
+    """Directory of the write-once copy ``tag`` of fixture table
+    ``source``, under ``_SCRATCH`` as named by ``copy_name``.
+
+    Returns at once when the copy's ``_SUCCESS`` exists. Otherwise
+    ``build(tmp)`` writes it into a fresh temporary directory, which is
+    published with one ``os.rename``. The loser of a race keeps the
+    winner's copy, and raises when there is none. A new copy retires the
+    older generations of the same tag and fixture, and nothing else."""
+    stem = _copy_stem(sf_dir, tag)
+    path = os.path.join(_SCRATCH, copy_name(sf_dir, source, tag))
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return path
+    os.makedirs(_SCRATCH, exist_ok=True)
+    # The ``tmp_`` prefix keeps a concurrent build out of the purge glob.
+    tmp = tempfile.mkdtemp(prefix=f"tmp_{stem}_", dir=_SCRATCH)
+    try:
+        build(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "ab").close()
+        os.rename(tmp, path)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            raise
+    for old in glob.glob(os.path.join(_SCRATCH, f"{stem}_*")):
+        if old != path:
+            shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
 # Tables worth re-laying out: the fixture files are single-row-group, so
 # they scan as ONE task no matter the core count. A real engine owns its
 # storage layout — ingest once into multi-file parquet at core-count
-# parallelism (write-once, atomic rename), and every subsequent scan of
-# the fact tables parallelizes. The events copy is also the directory
+# parallelism, and every subsequent scan of the fact tables
+# parallelizes. The events copy is also the directory
 # ``streaming.streams.events_stream`` replays.
 _RELAYOUT_TABLES = {"lineitem", "orders", "events"}
 
 
 def _relayout_path(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Directory of the multi-file re-layout copy of one fixture table,
-    written on first use (atomic rename) and reused after."""
-    import tempfile
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), "bishe_spark_scratch")
-    os.makedirs(base, exist_ok=True)
-    # Key the scratch copy to the source file's (size, mtime): the driver
-    # regenerates fixtures between rounds, and a stale re-layout of an old
-    # generation must miss, not silently serve old data.
-    st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    path = os.path.join(base, f"relayout_{sf_tag}_{name}_{fp}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        n = spark.sparkContext.defaultParallelism
-        tmp = tempfile.mkdtemp(prefix=f"relayout_{sf_tag}_{name}_", dir=base)
-        # events is written post-conversion: the scratch copy carries a
-        # proper micros timestamp, no legacy-nanos handling on re-read.
-        _raw_scan(spark, sf_dir, name).repartition(n).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)  # atomic publish; loser of a race cleans up
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-        # Purge superseded generations: the driver regenerates fixtures
-        # between rounds, and each regeneration changes the fingerprint —
-        # without this sweep every round strands a full parquet copy of
-        # the fact tables per sf under the scratch root.
-        import glob as _glob
-        import shutil as _shutil
-
-        for old in _glob.glob(os.path.join(base, f"relayout_{sf_tag}_{name}_*")):
-            if old != path:
-                _shutil.rmtree(old, ignore_errors=True)
-    return path
+    """Directory of the multi-file re-layout copy of one fixture table."""
+    # events is written post-conversion: the copy carries a proper micros
+    # timestamp, no legacy-nanos handling on re-read.
+    return derived_copy(
+        sf_dir,
+        name,
+        f"relayout_{name}",
+        lambda tmp: _raw_scan(spark, sf_dir, name)
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
 
 
 def _relayout_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = _read_parquet(spark, _relayout_path(spark, sf_dir, name))
-    # Scratch copies published by earlier engine versions may carry the
-    # raw NTZ/nanos ts; normalize on read too so the contract ("t() hands
-    # out TIMESTAMP micros") holds regardless of who wrote the copy.
-    if name == "events":
-        df = events_ts_to_micros(df)
-    return _ntz_to_ltz(df)
+    # The copy was written from ``_raw_scan``, so its timestamps are
+    # already TIMESTAMP micros; a copy written under another rule has
+    # another name and is never read.
+    return _read_parquet(spark, _relayout_path(spark, sf_dir, name))
 
 
 _EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
@@ -187,14 +221,18 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``_relayout_scan``); results are identical, scans parallelize. A
     failed re-layout logs one warning and reads the raw fixture.
 
+    The re-layout, like every write-once copy derived from a fixture
+    table, goes through ``derived_copy``: one copy per tag, fixture
+    directory and source fingerprint, published by rename, older
+    generations of the same tag and fixture retired. A rewritten fixture
+    names a new copy, so no copy outlives the data it was derived from.
+
     Every scan is given its schema from an in-process memo, so a warm
     ``t()`` starts no Spark job (inferring a schema reads a parquet footer
-    in a job of its own). The memo is keyed by the parquet path, its size
-    and ``st_mtime_ns`` (for a re-layout directory, those of its
-    ``_SUCCESS`` marker; the directory is written once and its name
-    carries the source fingerprint) and the session's schema-inference
-    confs (``_SCHEMA_CONFS``), so a rewritten fixture or a flipped
-    ``nanosAsLong`` misses.
+    in a job of its own). The memo is keyed by the parquet path, its
+    ``_fingerprint`` (for a re-layout directory, that of its ``_SUCCESS``
+    marker) and the session's schema-inference confs (``_SCHEMA_CONFS``),
+    so a rewritten fixture or a flipped ``nanosAsLong`` misses.
 
     Also appends InferFiltersFromGenerate to the session's excluded
     optimizer rules, keeping any rule already there: the rule clones a

@@ -1101,7 +1101,7 @@ def embedding_pca_power3(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned, never collected — the PageRank loop shape applied to linear
     algebra, and the exact-arithmetic counterpart of ann_kmeans_train's
     float path. Rayleigh-quotient monotonicity (R(q_k) nondecreasing,
-    the power-method invariant) is asserted in tests/test_r3_ops.py."""
+    the power-method invariant) is asserted in tests/test_exact_ops.py."""
     e = widen(t(spark, sf_dir, "embeddings"))
     vpos = (
         e.select("vec_id", F.posexplode("embedding").alias("_pos", "_x"))

@@ -9,20 +9,33 @@ round-trip is lossless, not just that it ran.
 
 Sinks write partitioned directories (the 100 TB pattern: one file per
 task, partition-pruned on read via the partitioning column).
+
+Everything here lives under the one scratch root,
+``operators.relational._SCRATCH``. A sink that writes on every call
+overwrites its own directory. A copy written once and reused (the
+by-year layout, the fragmented lineitem, the corrupt JSON, the
+per-document files, the daily MV) goes through
+``relational.derived_copy``: it is named by its tag, the fixture dir and
+the source table's fingerprint, published by rename, and retires only
+older generations of itself. The bucketed tables carry the same
+``copy_name`` in their catalog name. So a rewritten fixture never meets
+a copy of its old data.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bishe_gpu_database_spark.operators.relational import t
+from bishe_gpu_database_spark.operators.relational import (
+    _SCRATCH,
+    copy_name,
+    derived_copy,
+    t,
+)
 from bishe_gpu_database_spark.registry import register
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "bishe_spark_scratch")
 
 _AGG_ORACLE = """
     SELECT o_orderstatus,
@@ -79,19 +92,17 @@ def source_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _byyear_path(spark: SparkSession, sf_dir: str) -> str:
-    """lineitem re-laid-out hive-partitioned by ship year (written once
-    per scale factor, reused by the pruning and DPP queries)."""
-    path = os.path.join(
-        _SCRATCH, f"lineitem_byyear_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    """lineitem re-laid-out hive-partitioned by ship year (a derived
+    copy, reused by the pruning and DPP queries)."""
+
+    def _write(tmp):
         li = t(spark, sf_dir, "lineitem").select(
             F.year("l_shipdate").cast("int").alias("ship_year"),
             F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias("cents"),
         )
-        li.write.mode("overwrite").partitionBy("ship_year").parquet(path)
-    return path
+        li.write.mode("overwrite").partitionBy("ship_year").parquet(tmp)
+
+    return derived_copy(sf_dir, "lineitem", "lineitem_byyear", _write)
 
 
 @register(
@@ -140,14 +151,14 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey) so the join needs NO shuffle — each task joins bucket i to
     bucket i (no Exchange above the scans, asserted in test_plans). This
     is the 100 TB pattern for repeated fact-fact joins: pay the shuffle
-    once at write time, never per query."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    once at write time, never per query. The table names carry
+    ``copy_name``'s key, so a rewritten fixture misses the catalog."""
     names = {}
     for tbl, key, cols in (
         ("orders", "o_orderkey", ["o_orderkey", "o_orderpriority"]),
         ("lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]),
     ):
-        name = f"bkt_{tbl}_{sf_tag}"
+        name = copy_name(sf_dir, tbl, f"bkt_{tbl}")
         names[tbl] = name
         if not spark.catalog.tableExists(name):
             (
@@ -391,13 +402,16 @@ def compaction_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ``sink_compaction`` oracles the content, tests assert the file
     counts."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    frag = os.path.join(_SCRATCH, f"lineitem_frag_{tag}")
     compact = os.path.join(_SCRATCH, f"lineitem_compact_{tag}")
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        li.repartition(64).write.mode("overwrite").parquet(frag)
+    frag = derived_copy(
+        sf_dir,
+        "lineitem",
+        "lineitem_frag",
+        lambda tmp: li.repartition(64).write.mode("overwrite").parquet(tmp),
+    )
     n = spark.sparkContext.defaultParallelism
     spark.read.parquet(frag).repartition(n).write.mode("overwrite").parquet(compact)
     return frag, compact
@@ -420,7 +434,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     output files are uniform), and the aggregate proves the rewrite lost
     nothing. At scale this runs per-partition with atomic directory
     swap — the same write-once/rename pattern as the ingest re-layout
-    (operators/relational._relayout_scan)."""
+    (``relational.derived_copy``)."""
     _, compact = compaction_paths(spark, sf_dir)
     back = spark.read.parquet(compact)
     return back.groupBy("l_returnflag").agg(
@@ -533,17 +547,17 @@ def source_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     base = t(spark, sf_dir, "events").select("event_id", "user_id")
-    path = os.path.join(
-        _SCRATCH, f"events_corrupt_json_{os.path.basename(sf_dir.rstrip('/'))}"
+    line = F.when(
+        F.col("event_id") % 17 == 3,
+        # truncated mid-object: unparseable, deterministically
+        F.concat(F.lit('{"event_id": '), F.col("event_id"), F.lit(', "user_')),
+    ).otherwise(F.to_json(F.struct("event_id", "user_id")))
+    path = derived_copy(
+        sf_dir,
+        "events",
+        "events_corrupt_json",
+        lambda tmp: base.select(line.alias("value")).write.mode("overwrite").text(tmp),
     )
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        line = F.when(
-            F.col("event_id") % 17 == 3,
-            # truncated mid-object: unparseable, deterministically
-            F.concat(F.lit('{"event_id": '), F.col("event_id"), F.lit(', "user_')),
-        ).otherwise(F.to_json(F.struct("event_id", "user_id")))
-        base.select(line.alias("value")).write.mode("overwrite").text(path)
     schema = StructType(
         [
             StructField("event_id", LongType()),
@@ -611,38 +625,21 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursiveFileLookup partitioned layout. The reference has no file
     I/O at all (stdout is its only sink — ref: ps/log.ps1)."""
     src = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 0)
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    path = os.path.join(_SCRATCH, f"docs_bin_{sf_tag}_{fp}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(prefix=f"docs_bin_{sf_tag}_", dir=_SCRATCH)
 
-        # Executor-side materialization: each partition writes its own
-        # files (doc_ids are disjoint across partitions, so no write
-        # races) — no row data ever crosses to the driver. On a real
-        # cluster _SCRATCH must be shared storage (NFS/object store);
-        # the shape is the same either way.
-        def _write_partition(rows, _dir=tmp):
+    # Executor-side materialization: each partition writes its own files
+    # (doc_ids are disjoint across partitions, so no write races) — no
+    # row data ever crosses to the driver. On a real cluster the scratch
+    # root must be shared storage (NFS/object store); the shape is the
+    # same either way.
+    def _write(tmp):
+        def _write_partition(rows):
             for r in rows:
-                with open(os.path.join(_dir, f"doc_{r.doc_id}.bin"), "wb") as f:
+                with open(os.path.join(tmp, f"doc_{r.doc_id}.bin"), "wb") as f:
                     f.write((r.text or "").encode("utf-8"))
 
         src.select("doc_id", "text").foreachPartition(_write_partition)
-        with open(os.path.join(tmp, "_SUCCESS"), "wb"):
-            pass
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
-        import glob as _glob
-        import shutil as _shutil
-
-        for old in _glob.glob(os.path.join(_SCRATCH, f"docs_bin_{sf_tag}_*")):
-            if old != path:
-                _shutil.rmtree(old, ignore_errors=True)
+    path = derived_copy(sf_dir, "documents", "docs_bin", _write)
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -776,44 +773,22 @@ def mv_rewrite_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     days (≈ table_days rows) instead of the fact table, and the MV
     refreshes incrementally by day partition (see ivm_incremental_agg
     for the delta-merge form)."""
-    od = t(spark, sf_dir, "orders")
-    sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    path = os.path.join(_SCRATCH, f"mv_orders_daily_{sf_tag}_{st.st_size}_{st.st_mtime_ns}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # tmp prefix deliberately does NOT match the stale-MV cleanup
-        # glob below — a concurrent builder's in-progress tmp dir must
-        # never be swept as "stale".
-        tmp = tempfile.mkdtemp(prefix=f"tmp_mv_orders_daily_{sf_tag}_", dir=_SCRATCH)
-        (
-            od.groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(
-                    F.round(F.col("o_totalprice") * 100).cast("bigint")
-                ).alias("cents_total"),
-            )
-            .write.mode("overwrite")
-            .parquet(tmp)
+    daily = (
+        t(spark, sf_dir, "orders")
+        .groupBy(F.date_trunc("day", "o_orderdate").alias("day"))
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("cents_total"),
         )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-            # Losing the rename race is fine (the winner's MV is
-            # identical — fingerprint-keyed); any other failure must
-            # surface, not fall through to reading a missing path.
-            if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                raise
-        import glob as _glob
-        import shutil as _shutil
-
-        for old in _glob.glob(os.path.join(_SCRATCH, f"mv_orders_daily_{sf_tag}_*")):
-            if old != path:
-                _shutil.rmtree(old, ignore_errors=True)
-    mv = spark.read.parquet(path)
+    )
+    mv = spark.read.parquet(
+        derived_copy(
+            sf_dir,
+            "orders",
+            "mv_orders_daily",
+            lambda tmp: daily.write.mode("overwrite").parquet(tmp),
+        )
+    )
     return (
         mv.groupBy(F.date_trunc("month", "day").cast("date").alias("month"))
         .agg(

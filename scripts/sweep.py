@@ -34,12 +34,10 @@ always the last stdout line. The exit status is 1 when any query fails.
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import shutil
 import sys
-import tempfile
 import time
 
 import duckdb
@@ -47,6 +45,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bishe_gpu_database_spark.operators.relational import _SCRATCH  # noqa: E402
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
 from perfbench.harness import git_tree_hash  # noqa: E402
 from tests.conftest import (  # noqa: E402
@@ -187,15 +186,12 @@ PERTURBED_FIXTURES = {
 
 
 def fresh_fixture(fixture: str, src: str) -> str:
-    """Rebuild one derived fixture in the engine's scratch dir and purge
-    every copy the engine cached from an earlier build of it:
-    ``sources/formats.py`` keys its JSON/CSV/ORC/XML re-encodes and sink
-    layouts by the fixture dir's basename, so they would go stale."""
-    scratch = os.path.join(tempfile.gettempdir(), "bishe_spark_scratch")
-    dst = os.path.join(scratch, f"sf_{fixture}")
+    """Rebuild one derived fixture in the engine's scratch root. Nothing
+    the engine copied from an earlier build needs purging: every
+    write-once copy is named by its source files' size and mtime
+    (``relational.derived_copy``), so the rebuilt files miss them all."""
+    dst = os.path.join(_SCRATCH, f"sf_{fixture}")
     shutil.rmtree(dst, ignore_errors=True)
-    for cached in glob.glob(os.path.join(scratch, f"*_sf_{fixture}")):
-        shutil.rmtree(cached, ignore_errors=True)
     PERTURBED_FIXTURES[fixture](src, dst)
     return dst
 

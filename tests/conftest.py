@@ -78,6 +78,15 @@ def job_count(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def synthetic_dir(tmp_path, name: str, df) -> str:
+    """A fixture dir ``tmp_path/sfdir`` holding ``df`` as ``name.parquet``,
+    for driving a query callable on hand-made rows."""
+    d = str(tmp_path / "sfdir")
+    os.makedirs(d, exist_ok=True)
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, f"{name}.parquet"))
+    return d
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLE_NAMES:

@@ -1,6 +1,7 @@
 """Semantic invariants for the CDC / dimension-history / sketch
 operators beyond oracle parity: merge action partitioning, SCD2 interval
-contiguity, and the HLL estimate's error bound against the exact count."""
+contiguity, the HLL estimate's error bound against the exact count, and
+the key-sequence gap audit, which must surface fully-empty buckets."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ from bishe_gpu_database_spark.operators.cdc import (
     scd2_history,
 )
 from bishe_gpu_database_spark.operators.relational import t
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, synthetic_dir
 
 
 def test_cdc_merge_actions_partition_keyspace(spark):
@@ -210,3 +211,28 @@ def test_range_layout_files_are_disjoint_time_slices(spark):
     spans = sorted((r["lo"], r["hi"]) for r in per_file)
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         assert hi1 <= lo2, (hi1, lo2)
+
+
+def test_sequence_gaps_surfaces_fully_empty_buckets(spark, tmp_path):
+    """Keys 0..999 and 3000..3010: buckets 1 and 2 hold ZERO keys and must
+    each surface as a row with present=0 and missing = full bucket width —
+    the r2 implementation emitted no row for them (ADVICE.md, medium)."""
+    from bishe_gpu_database_spark.operators.quality import quality_sequence_gaps
+
+    keys = list(range(0, 1000)) + list(range(3000, 3011))
+    df = spark.createDataFrame([(k,) for k in keys], "l_orderkey bigint")
+    d = synthetic_dir(tmp_path, "lineitem", df)
+    out = {r["bucket"]: r for r in quality_sequence_gaps(spark, d).collect()}
+    assert set(out) == {1, 2}
+    for b in (1, 2):
+        assert out[b]["present"] == 0
+        assert out[b]["expected"] == 1000
+        assert out[b]["missing"] == 1000
+
+
+def test_sequence_gaps_no_gaps_yields_empty(spark, tmp_path):
+    from bishe_gpu_database_spark.operators.quality import quality_sequence_gaps
+
+    df = spark.createDataFrame([(k,) for k in range(500, 2500)], "l_orderkey bigint")
+    d = synthetic_dir(tmp_path, "lineitem", df)
+    assert quality_sequence_gaps(spark, d).count() == 0

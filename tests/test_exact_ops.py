@@ -2,19 +2,23 @@
 DuckDB oracle proves Spark and DuckDB agree; these prove the shared
 formula agrees with a THIRD, straightforward implementation (pure
 Python / numpy), guarding against both engines encoding the same
-mistake."""
+mistake: the sliding median, the geo grid-bucket join on cell-boundary
+straddlers, and the fixed-point power iteration's exact recurrence and
+Rayleigh monotonicity."""
 
 from __future__ import annotations
 
 import math
+import random
 import re
 
 import numpy as np
 from pyspark.sql import functions as F
 
+from bishe_gpu_database_spark.operators.geo import _CELL, _D, _bucketed_candidates
 from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MEDIUM, SF_SMALL
 
 
 def _tokens(text: str) -> list[str]:
@@ -130,3 +134,112 @@ def test_simpson_matches_python(spark):
         assert row["n_tokens"] == n and row["n_distinct"] == len(c)
         assert math.isclose(row["simpson"], round(num / (n * (n - 1)), 6),
                             rel_tol=0, abs_tol=1e-9)
+
+
+def test_sliding_median_matches_python_rolling(spark):
+    """Recompute the 5-row rolling doubled-median in plain Python over
+    the same (ts, event_id) order and compare every row."""
+    from bishe_gpu_database_spark.operators.relational import (
+        t,
+        window_median_sliding,
+    )
+
+    got = {
+        (r["event_type"], r["event_id"]): (r["n_in_frame"], r["median_2x_cents"])
+        for r in window_median_sliding(spark, SF_SMALL).collect()
+    }
+    ev = sorted(
+        t(spark, SF_SMALL, "events")
+        .select("event_type", "ts", "event_id", F.round(F.col("value") * 100).cast("bigint").alias("cents"))
+        .collect(),
+        key=lambda r: (r["event_type"], r["ts"], r["event_id"]),
+    )
+    by_type: dict = {}
+    for r in ev:
+        hist = by_type.setdefault(r["event_type"], [])
+        hist.append(r["cents"])
+        win = sorted(hist[-5:])
+        n = len(win)
+        want = (n, win[(n - 1) // 2] + win[n // 2])
+        assert got[(r["event_type"], r["event_id"])] == want
+
+
+def test_geo_neighbor_bucketing_complete_on_boundaries(spark):
+    """Points placed straddling cell boundaries (distance exactly _D,
+    _D±1, across a corner) through the production _bucketed_candidates —
+    must produce exactly the brute-force Chebyshev-ball pairs in both
+    directed and undirected modes."""
+    rng = random.Random(11)
+    pts = [(i, rng.randrange(0, 4 * _CELL), rng.randrange(0, 4 * _CELL)) for i in range(60)]
+    # Adversarial straddlers around the cell seam at x = _CELL.
+    nid = len(pts)
+    for dx, dy in [(_D, 0), (_D + 1, 0), (_D, _D), (0, _D + 1), (-_D, _D)]:
+        pts.append((nid, _CELL - 1, _CELL - 1))
+        pts.append((nid + 1, _CELL - 1 + dx, _CELL - 1 + dy))
+        nid += 2
+    df = spark.createDataFrame(pts, "k int, x long, y long").localCheckpoint()
+    expected = {
+        (a[0], b[0])
+        for i, a in enumerate(pts)
+        for b in pts[i + 1 :]
+        if abs(a[1] - b[1]) <= _D and abs(a[2] - b[2]) <= _D
+    }
+    got = {(r.u, r.v) for r in _bucketed_candidates(df, directed=False).collect()}
+    assert got == expected
+    assert expected, "fixture must contain neighbor pairs"
+    got_directed = {
+        (r.u, r.v) for r in _bucketed_candidates(df, directed=True).collect()
+    }
+    assert got_directed == expected | {(v, u) for (u, v) in expected}
+
+
+def test_geo_neighbor_pairs_emitted_once(spark):
+    """Each qualifying pair appears exactly once (the 3x3 probe explosion
+    joins a unique home cell per partner)."""
+    from bishe_gpu_database_spark.operators.geo import geo_neighbor_pairs
+
+    df = geo_neighbor_pairs(spark, SF_MEDIUM)
+    n = df.count()
+    nd = df.select("u", "v").distinct().count()
+    assert n == nd
+
+
+def test_pca_power_rayleigh_monotone_and_exact(spark):
+    """The fixed-point power iteration must (a) reproduce the exact
+    integer recurrence bit-for-bit and (b) satisfy the power-method
+    invariant: the Rayleigh quotient R(q_k) = qGq/qq is non-decreasing
+    across iterations."""
+    import numpy as np
+
+    from bishe_gpu_database_spark.operators.similarity import embedding_pca_power3
+
+    sf = SF_SMALL
+    rows = spark.read.parquet(f"{sf}/embeddings.parquet").select("embedding").collect()
+    V = np.floor(np.array([r.embedding for r in rows], dtype=np.float64) * 1048576).astype(
+        np.int64
+    )
+    G = (V.astype(np.float64).T @ V.astype(np.float64))
+
+    def rayleigh(q):
+        qf = q.astype(np.float64)
+        return (qf @ G @ qf) / (qf @ qf)
+
+    q = np.full(64, 1048576, dtype=np.int64)
+    rs = [rayleigh(q)]
+    for _ in range(3):
+        dots = V @ q
+        sd = np.max(np.abs(dots)) // 2**20 + 1
+        dots = np.sign(dots) * (np.abs(dots) // sd)
+        w = V.T @ dots
+        sw = np.max(np.abs(w)) // 2**20 + 1
+        q = np.sign(w) * (np.abs(w) // sw)
+        rs.append(rayleigh(q))
+    # (b) invariant: strictly improving on this fixture, non-decreasing always
+    assert all(rs[i + 1] >= rs[i] for i in range(3)), rs
+    assert rs[3] > rs[0], rs
+    # (a) the distributed result equals the exact integer recurrence
+    got = {
+        r.dim: r.q_fx for r in embedding_pca_power3(spark, sf).collect()
+    }
+    want = {i + 1: int(q[i]) for i in range(64)}
+    assert got == want

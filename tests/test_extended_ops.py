@@ -1,6 +1,7 @@
 """Semantic invariants for the round-1 extension operators beyond oracle
 parity: PageRank conservation bounds, gap-fill spine density, compaction
-file counts, and mixture sampling monotonicity."""
+file counts, mixture sampling monotonicity, and the MV rewrite's
+conservation of base totals."""
 
 from __future__ import annotations
 
@@ -103,3 +104,22 @@ def test_scalable_ntile_matches_single_partition_window(spark):
     )
     want = {r["decile"]: (r["n_rows"], r["lo"], r["hi"]) for r in ref.collect()}
     assert got == want
+
+
+def test_mv_rewrite_conserves_base_totals(spark):
+    """The MV-answered month rollup must conserve the base table's global
+    count and cent total exactly (aggregation compositionality)."""
+    from bishe_gpu_database_spark.operators.relational import t
+    from bishe_gpu_database_spark.sources.formats import mv_rewrite_monthly
+
+    rows = mv_rewrite_monthly(spark, SF_SMALL).collect()
+    od = t(spark, SF_SMALL, "orders")
+    base = od.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("cents"),
+    ).collect()[0]
+    assert sum(r["n_orders"] for r in rows) == base["n"]
+    assert sum(r["cents_total"] for r in rows) == base["cents"]
+    months = [r["month"] for r in rows]
+    assert len(months) == len(set(months))
+    assert all(m.day == 1 for m in months)

@@ -1,9 +1,12 @@
 """Semantic invariants for the corpus-mining / sessionization / outlier
 operators beyond oracle parity: ratio bounds, session gap property,
-3-sigma cross-check in float, mode maximality, and reshape conservation."""
+3-sigma cross-check in float, mode maximality, reshape conservation,
+the A/B test's FALSE (never NULL) verdict and overflow-safe inequality,
+and the seasonal index's event-weighted centering."""
 
 from __future__ import annotations
 
+import datetime
 import math
 
 from pyspark.sql import functions as F
@@ -20,7 +23,7 @@ from bishe_gpu_database_spark.operators.timeseries import (
     events_sessionize,
     timeseries_zscore_outliers,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, synthetic_dir
 
 
 def test_repetition_ratios_bounded(spark):
@@ -205,3 +208,64 @@ def test_retention_day0_counts_cohort_size(spark):
         .collect()
     )
     assert day0 == {r["cohort_day"]: r["count"] for r in cohorts}
+
+
+def test_ab_test_single_arm_false_not_null(spark, tmp_path):
+    """One user => one populated arm. The verdict must be a deterministic
+    FALSE (gated), not NULL, and the empty arm's counts must read 0
+    (ADVICE.md, low: degenerate assignment previously yielded NULLs)."""
+    from bishe_gpu_database_spark.operators.mining import events_ab_test
+
+    ts = datetime.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(1, ts, 7, "purchase", 1.0, "{}")],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string",
+    )
+    d = synthetic_dir(tmp_path, "events", df)
+    r = events_ab_test(spark, d).collect()[0]
+    assert r["significant_95"] is False
+    # exactly one arm populated, the other zero-filled
+    assert sorted([r["n0"], r["n1"]]) == [0, 1]
+    assert r["c0"] is not None and r["c1"] is not None
+
+
+def test_ab_test_overflow_safe_at_large_counts(spark):
+    """The significance inequality must evaluate in DECIMAL(38,0), not
+    64-bit: with 1e8 users/arm and a 1000-ppm rate gap the old BIGINT form
+    overflows (ANSI: throws). Evaluate the exact production expression on
+    a literal row at that scale and check the verdict is sane."""
+    row = spark.sql(
+        """
+        SELECT coalesce(
+          CAST(r0 - r1 AS DECIMAL(38,0)) * (r0 - r1) * n0 * n1 * 10000
+            > CAST(38416 AS DECIMAL(38,0)) * pp * (1000000 - pp) * (n0 + n1),
+          false) AS significant_95
+        FROM (SELECT CAST(100000000 AS BIGINT) AS n0,
+                     CAST(100000000 AS BIGINT) AS n1,
+                     CAST(51000 AS BIGINT) AS r0,
+                     CAST(50000 AS BIGINT) AS r1,
+                     CAST(50500 AS BIGINT) AS pp)
+        """
+    ).collect()[0]
+    # z ~ 32 at this scale: decisively significant; the unfixed form
+    # raises ARITHMETIC_OVERFLOW here instead.
+    assert row["significant_95"] is True
+
+
+def test_seasonal_profile_index_centers_on_million(spark):
+    """The event-weighted mean of the seasonal index is 1e6 by
+    construction (cell_avg/global_avg weighted by cell size), and counts
+    partition the corpus."""
+    from bishe_gpu_database_spark.operators.relational import t
+    from bishe_gpu_database_spark.operators.timeseries import (
+        timeseries_seasonal_profile,
+    )
+
+    rows = timeseries_seasonal_profile(spark, SF_SMALL).collect()
+    n_total = t(spark, SF_SMALL, "events").count()
+    assert sum(r["n_events"] for r in rows) == n_total
+    weighted = sum(r["seasonal_ppm"] * r["n_events"] for r in rows) / n_total
+    assert abs(weighted - 1_000_000) < 200  # truncation slack only
+    for r in rows:
+        assert 0 <= r["dow"] <= 6 and 0 <= r["hour"] <= 23

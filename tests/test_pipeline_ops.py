@@ -1,7 +1,8 @@
 """Semantic invariants for the corpus-management pipeline operators
 beyond oracle parity: split determinism and proportions, pack-budget
 bounds, decontamination soundness (no surviving doc shares a shingle
-with the eval corpus)."""
+with the eval corpus), and BPE pair counts against a corpus-side
+recount."""
 
 from __future__ import annotations
 
@@ -84,3 +85,37 @@ def test_decontaminate_sound(spark):
         .count()
     )
     assert leaked == 0
+
+
+def test_bpe_pair_counts_conserve_mass(spark):
+    """Every reported pair count must equal an independent corpus-side
+    recount (explode words directly, no vocab collapse)."""
+    from bishe_gpu_database_spark.functions.text import tokens
+    from bishe_gpu_database_spark.operators.pipeline import pipeline_bpe_pair_counts
+    from bishe_gpu_database_spark.operators.relational import t
+
+    got = {
+        r["pair"]: r["n_occurrences"]
+        for r in pipeline_bpe_pair_counts(spark, SF_SMALL).collect()
+    }
+    assert len(got) == 20
+    d = t(spark, SF_SMALL, "documents").select("text")
+    w = d.select(F.explode(tokens(F.col("text"))).alias("w")).filter(
+        F.length("w") >= 2
+    )
+    direct = {
+        r["pair"]: r["n"]
+        for r in w.select(
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.length("w") - 1),
+                    lambda i: F.substring(F.col("w"), i, F.lit(2)),
+                )
+            ).alias("pair")
+        )
+        .groupBy("pair")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    for pair, n in got.items():
+        assert direct[pair] == n, (pair, n, direct.get(pair))

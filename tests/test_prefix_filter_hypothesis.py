@@ -2,7 +2,8 @@
 similarity join: on random tiny corpora drawn from a small vocabulary
 (so shingle overlap is common), the Spark implementation must return
 EXACTLY the pairs a brute-force Python Jaccard computation finds at
-tau = 0.3 — the prefix filter may never drop a qualifying pair."""
+tau = 0.3 — the prefix filter may never drop a qualifying pair. On the
+fixture, its pairs equal the brute-force shingle join's at that tau."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import tempfile
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from tests.conftest import SF_SMALL
 
 VOCAB = [f"w{i}" for i in range(12)]
 TAU = 0.3
@@ -56,3 +59,23 @@ def test_prefix_filter_lossless_on_random_corpora(spark, corpus):
         for r in dedup_prefix_filter_join(spark, d).collect()
     }
     assert got == _brute_pairs(corpus)
+
+
+def test_prefix_filter_join_equals_bruteforce(spark):
+    """Prefix filtering must be lossless: its pair set at tau=0.3 equals
+    the brute-force shingle-join pairs filtered to jaccard >= 0.3."""
+    from bishe_gpu_database_spark.operators.dedup import (
+        dedup_ngram_jaccard,
+        dedup_prefix_filter_join,
+    )
+
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup_prefix_filter_join(spark, SF_SMALL).collect()
+    }
+    want = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dedup_ngram_jaccard(spark, SF_SMALL).collect()
+        if r["jaccard"] >= 0.3
+    }
+    assert got == want and len(got) > 0

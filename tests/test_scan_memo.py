@@ -10,6 +10,10 @@
 - ``t()`` appends its excluded optimizer rule once and keeps the
   caller's, and a failed re-layout says why before reading the raw
   fixture.
+- Every write-once copy derived from a fixture table
+  (``relational.derived_copy``) is keyed by its source files: after the
+  fixture is rewritten, each query answers from the new data, and two
+  fixture dirs that share a basename keep their own copies.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import os
 import re
 import shutil
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -28,7 +33,8 @@ from bishe_gpu_database_spark.operators import relational
 from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
 from bishe_gpu_database_spark.session import TABLE_NAMES, scoped_conf
-from tests.conftest import SF_SMALL, job_count
+from bishe_gpu_database_spark.sources import formats
+from tests.conftest import SF_SMALL, compare_query_to_oracle, job_count
 
 # Build jobs the headline queries still start at SF_SMALL on a warm memo,
 # all from eager localCheckpoint / collect / count calls inside the
@@ -123,3 +129,70 @@ def test_failed_relayout_logs_and_reads_raw(spark, monkeypatch, caplog):
     [rec] = [r for r in caplog.records if r.name == relational.__name__]
     assert "orders" in rec.getMessage()
     assert "scratch is read-only" in rec.getMessage()
+
+
+# Queries that answer from a write-once copy of a fixture table: the
+# formats.py copies, the bucketed tables and one re-layout-backed query.
+DERIVED_COPY_QUERIES = [
+    "source_partition_pruning",
+    "source_dpp_join",
+    "sink_compaction",
+    "source_json_corrupt_records",
+    "source_bucketed_join",
+    "mv_rewrite_monthly",
+    "source_binaryfile",
+    "q1_pricing_summary",
+]
+
+
+@pytest.fixture
+def scratch(monkeypatch, tmp_path):
+    """A scratch root of the test's own, so its copies go with it."""
+    root = str(tmp_path / "scratch")
+    os.makedirs(root)
+    monkeypatch.setattr(relational, "_SCRATCH", root)
+    monkeypatch.setattr(formats, "_SCRATCH", root)
+    return root
+
+
+def _fixture_copy(dst) -> str:
+    shutil.copytree(SF_SMALL, dst)
+    return str(dst)
+
+
+def _halve(sf_dir: str) -> None:
+    """Rewrite the tables the copies derive from with half their rows."""
+    con = duckdb.connect()
+    for tbl in ("lineitem", "orders", "events", "documents"):
+        path = os.path.join(sf_dir, f"{tbl}.parquet")
+        (n,) = con.execute(f"SELECT count(*) FROM '{path}'").fetchone()
+        con.execute(f"COPY (SELECT * FROM '{path}' LIMIT {n // 2}) TO '{path}.new' (FORMAT PARQUET)")
+        os.replace(f"{path}.new", path)
+
+
+def _assert_oracle(spark, sf_dir: str, name: str) -> None:
+    spec = REGISTRY[name]
+    ok, msg = compare_query_to_oracle(spark, sf_dir, name, spec.fn, spec.oracle)
+    assert ok, msg
+
+
+@pytest.mark.parametrize("name", DERIVED_COPY_QUERIES)
+def test_rewritten_fixture_misses_every_derived_copy(spark, scratch, tmp_path, name):
+    _ensure_loaded()
+    sf = _fixture_copy(tmp_path / "sfx")
+    _assert_oracle(spark, sf, name)
+    _halve(sf)
+    _assert_oracle(spark, sf, name)
+
+
+@pytest.mark.parametrize("name", DERIVED_COPY_QUERIES)
+def test_same_basename_fixtures_keep_their_own_copies(spark, scratch, tmp_path, name):
+    _ensure_loaded()
+    a = _fixture_copy(tmp_path / "a" / "sfx")
+    b = _fixture_copy(tmp_path / "b" / "sfx")
+    _halve(b)
+    _assert_oracle(spark, a, name)
+    built_for_a = set(os.listdir(scratch))
+    _assert_oracle(spark, b, name)
+    assert built_for_a <= set(os.listdir(scratch))
+    _assert_oracle(spark, a, name)
