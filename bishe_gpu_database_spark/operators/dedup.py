@@ -28,7 +28,7 @@ from bishe_gpu_database_spark.functions.text import (
     shingles_of,
     tokens,
 )
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
 # Shared SQL fragments for the oracles (DuckDB list lambdas).
@@ -88,7 +88,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs by exact 5-word-shingle Jaccard ≥ 0.1.
     Shingle inverted-index join: shuffle on shingle, then per-pair count —
     the classic MapReduce formulation; rare shingles keep fan-out linear."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     sh = toks.select("doc_id", F.explode(shingles_of(F.col("toks"))).alias("shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -122,9 +122,9 @@ def _doc_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so an inline expression inside a lambda re-evaluates per element.
     The signature (16 ints) is all that ever shuffles.
     (InferFiltersFromGenerate is excluded session-wide by ``t()`` — it
-    would clone the signature expression into a filter below the widen()
-    repartition, running the minhash twice, once single-threaded.)"""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    would clone the signature expression into a filter on the scan,
+    running the minhash twice.)"""
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     # POLICY: documents with zero shingles (fewer than the 5-token
     # shingle width — empty, whitespace-only, or near-empty text) are
@@ -487,7 +487,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     quote-heavy pages. Same inverted-index join as dedup_ngram_jaccard —
     shuffle on shingle, per-pair count, broadcast size join — only the
     normalizer changes, so the scale contract is identical."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     sh = toks.select("doc_id", F.explode(shingles_of(F.col("toks"))).alias("shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -731,10 +731,8 @@ def dedup_span_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-document granularity.)"""
     from pyspark.sql import Window as W
 
-    from bishe_gpu_database_spark.operators.text_analysis import widen_docs
-
     SPAN = 10
-    d = widen_docs(spark, sf_dir)
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     # NULL text folds to the empty doc (one empty span), mirrored in the
     # oracle — r5 NULL-text axis.
     toks = d.select(
@@ -824,7 +822,7 @@ def dedup_eval_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled stratum exactly like this fixture. Composes the registered
     LSH operator with the shingle-join truth pipeline in one plan;
     output is a single audit row."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     sh = toks.select("doc_id", F.explode(shingles_of(F.col("toks"))).alias("shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -941,7 +939,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tau = 3/10 as one exact rational: the prefix length, the length
     # filter and the verify all derive from it in integer arithmetic.
     tau_num, tau_den = 3, 10
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     sets = (
         toks.select("doc_id", F.array_sort(shingles_of(F.col("toks"))).alias("sh"))

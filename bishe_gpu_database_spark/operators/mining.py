@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from bishe_gpu_database_spark.functions.text import norm_text, tokens
 from bishe_gpu_database_spark.operators.text_analysis import _SQL_NORM, _SQL_TOKENS
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
 
@@ -82,7 +82,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     and degenerate repetition in pre-training corpora. Two shuffles, both
     of count pairs: (doc_id, bigram) partial-aggregated map-side, then the
     per-doc max joined back to the narrow per-doc stats."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     base = _toks_and_bigrams(d)
     top = (
         base.select("doc_id", F.explode("bg").alias("b"))
@@ -150,7 +150,7 @@ def text_salience_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf-idf while hashing bit-stably — floats never decide anything).
     Corpus-wide df is one (token) aggregate; the N-docs scalar is a 1-row
     broadcast. Output bounded to docs < 100, top-3 terms each."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -211,7 +211,7 @@ def text_lift_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     with integer-only arithmetic. Unigram counts broadcast back onto the
     pair aggregate (the pair table after the HAVING floor is tiny);
     global top-20 goes through TakeOrderedAndProject, never a full sort."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     base = _toks_and_bigrams(d)
     pair = (
         base.select(F.explode("bg").alias("bigram"))
@@ -431,7 +431,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     can be computed on a sample and broadcast instead. Integer bits and
     truncating milli-average keep both engines bit-identical."""
     d = t(spark, sf_dir, "documents")
-    bg = widen(_toks_and_bigrams(d)).select("doc_id", F.explode("bg").alias("bigram"))
+    bg = _toks_and_bigrams(d).select("doc_id", F.explode("bg").alias("bigram"))
     lm = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("n"))
     scored = bg.join(lm, "bigram").select(
         "doc_id", F.length(F.bin("n")).alias("bits")

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from bishe_gpu_database_spark.functions.text import shingles_of, tokens
 from bishe_gpu_database_spark.operators.dedup import _SQL_SHINGLES
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
 # Portable doc-id hash: md5 of the decimal string → 48-bit int. Both
@@ -156,7 +156,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark, not a crawl — so it broadcasts and contamination detection
     is a map-side semi join; only the doc-id anti join shuffles."""
     d = t(spark, sf_dir, "documents")
-    sh = widen(d.select("doc_id", "source", "text")).select(
+    sh = d.select(
         "doc_id",
         "source",
         F.explode(shingles_of(tokens(F.col("text")))).alias("shingle"),
@@ -266,7 +266,7 @@ def pipeline_tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     position, so the id arrays are deterministic under any partitioning.
     At 100 TB the vocab build is one (token, count) aggregation and the
     encode pass is shuffle-free."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     tok = d.select(
         "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tk")
     )
@@ -333,7 +333,7 @@ def pipeline_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     auditing a 100 TB corpus costs exactly one scan + a per-source-sized
     shuffle. Ratio thresholds compare exact double divisions (no
     aggregation before the compare), so the gate is deterministic."""
-    d = widen(t(spark, sf_dir, "documents").select("source", "text"))
+    d = t(spark, sf_dir, "documents").select("source", "text")
     toks = tokens(F.col("text"))
     norm = F.lower("text")
     sig = d.select(
@@ -774,7 +774,7 @@ def pipeline_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting lists would instead be written straight to a token-bucketed
     sink, the standard sharded-index layout. df≥5 drops the hapax tail
     (half a real vocabulary) before anything wide is built."""
-    d = widen(t(spark, sf_dir, "documents"))
+    d = t(spark, sf_dir, "documents")
     posting = d.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     ).distinct()
@@ -938,7 +938,7 @@ def pipeline_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-mandated LLM-pipeline surface."""
     from bishe_gpu_database_spark.functions.text import tokens
 
-    d = widen(t(spark, sf_dir, "documents").select("text"))
+    d = t(spark, sf_dir, "documents").select("text")
     words = d.select(F.explode(tokens(F.col("text"))).alias("w")).filter(
         F.length("w") >= 2
     )
@@ -1002,7 +1002,7 @@ def pipeline_oversample_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, copy) pair materialized exactly once. The dual (downsampling)
     is pipeline_source_mixture's hash-rate gate; temperature-weighted
     mixing is pipeline_mixture_temperature."""
-    d = widen(t(spark, sf_dir, "documents")).select("doc_id", "lang")
+    d = t(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     target = counts.agg(F.max("n").alias("tgt"))
     plan = counts.crossJoin(F.broadcast(target)).select(
@@ -1078,7 +1078,7 @@ def pipeline_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is independent of target size, DSIR's defining property vs
     train-a-classifier selection."""
     tok = (
-        widen(t(spark, sf_dir, "documents"))
+        t(spark, sf_dir, "documents")
         .select("doc_id", "lang", "source", F.explode(tokens(F.col("text"))).alias("tk"))
         .withColumn(
             "bucket",
@@ -1256,7 +1256,7 @@ def pipeline_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``text_oov_rate`` (the cost of the chosen cutoff)."""
     from bishe_gpu_database_spark.functions.rank import global_rank
 
-    tok = widen(t(spark, sf_dir, "documents")).select(
+    tok = t(spark, sf_dir, "documents").select(
         F.explode(tokens(F.col("text"))).alias("tk")
     )
     vocab = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("cnt"))

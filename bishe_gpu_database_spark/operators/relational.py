@@ -142,17 +142,11 @@ def _copy_stem(sf_dir: str, tag: str) -> str:
     return f"{tag}_{base}_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
 
 
-def copy_name(sf_dir: str, source: str, tag: str) -> str:
-    """The name of the copy ``tag`` derives from fixture table ``source``:
-    its stem plus the source parquet's ``_fingerprint``, so a rewritten
-    fixture names a new copy instead of serving the old one."""
-    size, mtime = _fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
-    return f"{_copy_stem(sf_dir, tag)}_{size}_{mtime}"
-
-
 def derived_copy(sf_dir: str, source: str, tag: str, build: Callable[[str], None]) -> str:
     """Directory of the write-once copy ``tag`` of fixture table
-    ``source``, under ``_SCRATCH`` as named by ``copy_name``.
+    ``source``, under ``_SCRATCH``. Its name is the ``_copy_stem`` plus
+    the source parquet's ``_fingerprint``, so a rewritten fixture names a
+    new copy instead of serving the old one.
 
     Returns at once when the copy's ``_SUCCESS`` exists. Otherwise
     ``build(tmp)`` writes it into a fresh temporary directory, which is
@@ -160,7 +154,8 @@ def derived_copy(sf_dir: str, source: str, tag: str, build: Callable[[str], None
     winner's copy, and raises when there is none. A new copy retires the
     older generations of the same tag and fixture, and nothing else."""
     stem = _copy_stem(sf_dir, tag)
-    path = os.path.join(_SCRATCH, copy_name(sf_dir, source, tag))
+    size, mtime = _fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
+    path = os.path.join(_SCRATCH, f"{stem}_{size}_{mtime}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
     os.makedirs(_SCRATCH, exist_ok=True)
@@ -180,13 +175,18 @@ def derived_copy(sf_dir: str, source: str, tag: str, build: Callable[[str], None
     return path
 
 
-# Tables worth re-laying out: the fixture files are single-row-group, so
-# they scan as ONE task no matter the core count. A real engine owns its
-# storage layout — ingest once into multi-file parquet at core-count
-# parallelism, and every subsequent scan of the fact tables
-# parallelizes. The events copy is also the directory
-# ``streaming.streams.events_stream`` replays.
-_RELAYOUT_TABLES = {"lineitem", "orders", "events"}
+# The tables ``t()`` reads from a re-layout copy. The fixture files are
+# single-row-group, so each scans as ONE task whatever the core count. The
+# engine owns its storage layout, as a real engine does: it writes each of
+# these once as multi-file parquet at core-count width, and every later
+# scan runs at full parallelism with no shuffle of its own. They are the
+# fact tables (lineitem, orders, events) and the two corpus tables whose
+# per-row compute (tokenizing, shingling, minhash, vector math) would
+# otherwise run on one core (documents, embeddings). The dimension tables
+# are small and feed joins and aggregates, so they keep their raw scans.
+# The events copy is also the directory ``streaming.streams.events_stream``
+# replays.
+_RELAYOUT_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
 
 
 def _relayout_path(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -217,9 +217,12 @@ _NO_GENERATE_FILTERS = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFrom
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one fixture table — filters/pruning push into parquet.
-    Fact tables go through the engine's storage re-layout (see
-    ``_relayout_scan``); results are identical, scans parallelize. A
-    failed re-layout logs one warning and reads the raw fixture.
+    The tables in ``_RELAYOUT_TABLES`` (the fact tables, and the
+    ``documents`` and ``embeddings`` corpora that feed per-row compute)
+    are read from the engine's storage re-layout (see ``_relayout_scan``):
+    results are identical, scans run at core-count width, and no query
+    places rows itself. A failed re-layout logs one warning and reads the
+    raw fixture.
 
     The re-layout, like every write-once copy derived from a fixture
     table, goes through ``derived_copy``: one copy per tag, fixture
@@ -256,19 +259,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 name, type(e).__name__, e,
             )
     return _raw_scan(spark, sf_dir, name)
-
-
-def widen(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to full parallelism iff the scan is
-    narrower than the core count. Compute-heavy per-row operators (minhash,
-    shingling, embedding math) are otherwise serialized by file splits — a
-    small parquet file reads as ONE task no matter how many cores. At
-    100 TB the scan already has thousands of splits and this is a no-op,
-    so no shuffle is added where it would hurt."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
 
 
 def dec(c: str):

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
 # DuckDB-side fixed-order double dot product / squared norm.
@@ -53,7 +53,7 @@ def emb_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     int8 quantization, PQ, centroids, PCA) keep the full table — zero is
     meaningful data there. Every cosine oracle carries the same
     ``_SQL_NONZERO`` predicate so both engines see one corpus."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     return e.filter(_dot(F.col("embedding"), F.col("embedding")) > 0)
 
 
@@ -135,7 +135,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-neighbor candidates are generated by an equi-join on the bucket —
     O(n) instead of O(n²). Each projection is a fixed-order 64-term double
     fold, so buckets are bit-stable cross-engine."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     sign = lambda p, d: (  # noqa: E731
         F.when(
             F.conv(
@@ -290,7 +290,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label L2-norm statistics. Each row's norm is a deterministic
     double (fixed-order fold), rounded then summed as DECIMAL so the
     cross-row aggregation is order-independent."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     norm = F.round(F.sqrt(_dot(F.col("embedding"), F.col("embedding"))), 6)
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -376,7 +376,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a narrow map. Codes are integers from identical IEEE double
     expressions on both engines, so the oracle hashes the quantization
     bit-exactly (summed per label; arrays stay executor-side)."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     exploded = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("i", "x")
     ).select("vec_id", "label", "i", F.col("x").cast("double").alias("x"))
@@ -469,7 +469,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,6), so ranks hash bit-identically against the oracle."""
     from pyspark.sql import Window as W
 
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     ms = spark.range(_PQ_M).select(F.col("id").cast("int").alias("m"))
     cent = (
         e.filter(F.col("vec_id") < _PQ_K)
@@ -544,7 +544,7 @@ def ann_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine."""
     from pyspark.sql import Window as W
 
-    e = widen(t(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = e.filter(F.col("vec_id") < _N_CELLS).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     ).localCheckpoint()
@@ -663,7 +663,7 @@ def embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the IVF coarse-quantizer update step (ann_kmeans_train uses
     the float path); the shuffle carries (label, dim) partial sums —
     64 x n_labels rows per map task regardless of corpus size."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     fx = e.select(
         "label", F.posexplode("embedding").alias("_pos", "_x")
     ).select(
@@ -1102,7 +1102,7 @@ def embedding_pca_power3(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra, and the exact-arithmetic counterpart of ann_kmeans_train's
     float path. Rayleigh-quotient monotonicity (R(q_k) nondecreasing,
     the power-method invariant) is asserted in tests/test_exact_ops.py."""
-    e = widen(t(spark, sf_dir, "embeddings"))
+    e = t(spark, sf_dir, "embeddings")
     vpos = (
         e.select("vec_id", F.posexplode("embedding").alias("_pos", "_x"))
         .select(

@@ -14,14 +14,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bishe_gpu_database_spark.functions.text import h48, norm_text, tokens
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
-
-def widen_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents spread across all cores (the fixture is one file = one
-    task; no-op at real scale — see relational.widen)."""
-    return widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
 
 _SQL_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _SQL_TOKENS = f"string_split({_SQL_NORM}, ' ')"
@@ -67,13 +62,10 @@ def _sql_list(words: list[str]) -> str:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality signals: normalized length, token count, mean token length,
     punctuation ratio, stopword ratio — the standard pre-training filters.
-    ``widen()`` lifts the scan to full parallelism: a small parquet file
-    bin-packs into 1-2 tasks (openCostInBytes), serializing the per-doc
-    regex work — the r3 scale probe's worst ratio (2.99× for 10× data)
-    was exactly this, not regex cost. At 100 TB the scan already has
-    thousands of splits and widen() is a no-op. (widen_docs also prunes
-    to (doc_id, text) so the repartition never carries unused columns.)"""
-    d = widen_docs(spark, sf_dir)
+    A narrow map over the corpus: the scan's split count sets its
+    parallelism, and ``t()`` reads ``documents`` from its re-layout copy,
+    so the per-doc regex work spans every core."""
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     norm = norm_text(F.col("text"))
     toks = tokens(F.col("text"))
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
@@ -277,7 +269,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk count scales with corpus tokens, never with document count
     alone. The staple operator of embedding/RAG ingestion pipelines."""
     SIZE, STRIDE = 32, 24
-    d = widen_docs(spark, sf_dir)
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     # NULL text folds to the empty doc (one empty chunk), mirrored in the
     # oracle — r5 NULL-text axis.
     toks = d.select(
@@ -359,7 +351,7 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break. Explode → two-level aggregation (partial
     count map-side, so the shuffle carries (token, count), not tokens);
     the final top-k is a TakeOrdered, not a full sort."""
-    d = widen_docs(spark, sf_dir)
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     tok = d.select(F.explode(tokens(F.col("text"))).alias("tk"))
     counts = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("n"))
     w = W.orderBy(F.col("n").desc(), "tk")
@@ -394,7 +386,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation-shaped; the vocabulary is top-k-bounded so it broadcasts,
     making the scoring join map-side at any corpus size. Counts stay
     integers — the rate is the consumer's division."""
-    d = widen_docs(spark, sf_dir)
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tk"))
     w = W.orderBy(F.col("n").desc(), "tk")
     vocab = (
@@ -626,7 +618,7 @@ def text_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB it streams the corpus once, which is precisely how a linear
     classifier gate should deploy — heavier models swap the fold for a
     broadcast-weights Pandas UDF with identical plumbing."""
-    d = widen_docs(spark, sf_dir)
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokens(F.col("text"))
 
     def tok_weight(tk) -> F.Column:
@@ -675,7 +667,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id < 40 only to bound the oracle-compared output; the plan is
     identical unbounded."""
     tok = (
-        widen_docs(spark, sf_dir)
+        t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 40)
         .select("doc_id", F.explode(tokens(F.col("text"))).alias("tk"))
         .select("doc_id", h48(F.col("tk")).alias("h"))
@@ -736,7 +728,7 @@ def text_multipattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose by matching on the engine's existing shingle stream
     (``shingles_of``) instead of unigram tokens — same join, longer
     keys."""
-    tok = widen_docs(spark, sf_dir).select(
+    tok = t(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tk")
     )
     dict_df = spark.createDataFrame(_DICT, "pattern string, category string")

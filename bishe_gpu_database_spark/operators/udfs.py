@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import IntegerType, LongType
 
-from bishe_gpu_database_spark.operators.relational import t, widen
+from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import register
 
 _SQL_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -65,7 +65,7 @@ def udf_pandas_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas UDF: Arrow ships string batches to Python once; the
     pandas str ops are vectorized C under the hood — the 10-100× faster
     alternative to a row-at-a-time Python UDF."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text")
     return d.select("doc_id", _token_count_vec(F.col("text")).alias("n_tokens"))
 
 
@@ -209,7 +209,7 @@ def udf_map_in_pandas_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInPandas as a streaming per-partition filter+project: batches in,
     batches out, nothing materialized per group — the shape for quality
     filtering with a Python-only model in the loop."""
-    d = widen(t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars"))
+    d = t(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
 
     def keep_long(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -268,7 +268,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["vec_id", "label", "norm"],
             )
 
-    e = widen(t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"))
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     return e.mapInArrow(norms, "vec_id long, label int, norm double")
 
 
@@ -448,7 +448,7 @@ def udf_pandas_iter_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing: Arrow batch boundaries, worker reuse, and init-once
     semantics leave no trace in the result, which is exactly the
     contract being verified."""
-    d = widen(t(spark, sf_dir, "documents")).filter(F.col("doc_id") < 200)
+    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return d.select(
         "doc_id", _iter_weighted_len(F.col("text")).alias("model_score")
     )

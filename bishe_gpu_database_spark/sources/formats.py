@@ -17,9 +17,11 @@ by-year layout, the fragmented lineitem, the corrupt JSON, the
 per-document files, the daily MV) goes through
 ``relational.derived_copy``: it is named by its tag, the fixture dir and
 the source table's fingerprint, published by rename, and retires only
-older generations of itself. The bucketed tables carry the same
-``copy_name`` in their catalog name. So a rewritten fixture never meets
-a copy of its old data.
+older generations of itself. The bucketed tables are such copies too,
+registered in the catalog under their directory's name. So a rewritten
+fixture never meets a copy of its old data. The scratch root is read at
+call time, so pointing ``relational._SCRATCH`` elsewhere moves every
+copy and sink.
 """
 
 from __future__ import annotations
@@ -29,12 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bishe_gpu_database_spark.operators.relational import (
-    _SCRATCH,
-    copy_name,
-    derived_copy,
-    t,
-)
+from bishe_gpu_database_spark.operators import relational
+from bishe_gpu_database_spark.operators.relational import derived_copy, t
 from bishe_gpu_database_spark.registry import register
 
 _AGG_ORACLE = """
@@ -46,6 +44,12 @@ _AGG_ORACLE = """
 """
 
 
+def _sink_dir(sf_dir: str, tag: str) -> str:
+    """``tag``'s directory for fixture ``sf_dir`` under the scratch root,
+    read at call time."""
+    return os.path.join(relational._SCRATCH, f"{tag}_{os.path.basename(sf_dir.rstrip('/'))}")
+
+
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     """Write orders (price as exact integer cents) in ``fmt``, read back,
     aggregate. Integer cents make the round-trip exact for text formats."""
@@ -54,7 +58,7 @@ def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
     )
-    path = os.path.join(_SCRATCH, f"orders_{fmt}_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = _sink_dir(sf_dir, f"orders_{fmt}")
     writer = o.write.mode("overwrite").partitionBy("o_orderstatus")
     getattr(writer, fmt)(path)
     # Explicit schema on re-read for EVERY format, not just CSV: schema
@@ -151,25 +155,38 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey) so the join needs NO shuffle — each task joins bucket i to
     bucket i (no Exchange above the scans, asserted in test_plans). This
     is the 100 TB pattern for repeated fact-fact joins: pay the shuffle
-    once at write time, never per query. The table names carry
-    ``copy_name``'s key, so a rewritten fixture misses the catalog."""
+    once at write time, never per query. Each side is a ``derived_copy``:
+    written under a throwaway catalog name into the helper's tmp dir,
+    published by its rename, then registered under the published
+    directory's name, which a rewritten fixture changes."""
     names = {}
     for tbl, key, cols in (
         ("orders", "o_orderkey", ["o_orderkey", "o_orderpriority"]),
         ("lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]),
     ):
-        name = copy_name(sf_dir, tbl, f"bkt_{tbl}")
-        names[tbl] = name
-        if not spark.catalog.tableExists(name):
+        src = t(spark, sf_dir, tbl).select(*cols)
+
+        def _write(tmp, src=src, key=key):
+            # bucketBy writes only through saveAsTable; the throwaway
+            # entry is external, so dropping it keeps the files.
+            build = os.path.basename(tmp)
             (
-                t(spark, sf_dir, tbl)
-                .select(*cols)
-                .write.mode("overwrite")
-                .option("path", os.path.join(_SCRATCH, name))
+                src.write.mode("overwrite")
+                .option("path", tmp)
                 .bucketBy(8, key)
                 .sortBy(key)
-                .saveAsTable(name)
+                .saveAsTable(build)
             )
+            spark.sql(f"DROP TABLE IF EXISTS `{build}`")
+
+        path = derived_copy(sf_dir, tbl, f"bkt_{tbl}", _write)
+        names[tbl] = os.path.basename(path)
+        columns = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
+        spark.sql(
+            f"""CREATE TABLE IF NOT EXISTS `{names[tbl]}` ({columns})
+                USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS
+                LOCATION '{path}'"""
+        )
     o = spark.table(names["orders"])
     li = spark.table(names["lineitem"])
     return (
@@ -328,9 +345,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("int").alias("o_year"),
         "o_totalprice",
     )
-    path = os.path.join(
-        _SCRATCH, f"orders_pq_sink_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = _sink_dir(sf_dir, "orders_pq_sink")
     # r10 (guide §6): cluster rows by the partition columns before the
     # write — without it every scan task opens a writer per directory it
     # touches (32 tasks × ~21 (status, year) dirs ≈ 670 tiny files here;
@@ -378,9 +393,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_orderpriority",
         F.year("o_orderdate").cast("int").alias("o_year"),
     )
-    path = os.path.join(
-        _SCRATCH, f"orders_evolve_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    path = _sink_dir(sf_dir, "orders_evolve")
     old = o.filter(F.col("o_year") < 1996).drop("o_orderpriority", "o_year")
     new = o.filter(F.col("o_year") >= 1996).drop("o_year")
     old.write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
@@ -401,8 +414,7 @@ def compaction_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     to parallelism-sized files. Returns (fragmented_dir, compacted_dir);
     ``sink_compaction`` oracles the content, tests assert the file
     counts."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    compact = os.path.join(_SCRATCH, f"lineitem_compact_{tag}")
+    compact = _sink_dir(sf_dir, "lineitem_compact")
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
@@ -473,9 +485,7 @@ def _zkey_sql() -> str:
 
 
 def zorder_path(sf_dir: str) -> str:
-    return os.path.join(
-        _SCRATCH, f"lineitem_zorder_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    return _sink_dir(sf_dir, "lineitem_zorder")
 
 
 @register(
@@ -587,7 +597,7 @@ def source_roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("cents"),
     )
-    path = os.path.join(_SCRATCH, f"orders_xml_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = _sink_dir(sf_dir, "orders_xml")
     o.write.mode("overwrite").partitionBy("o_orderstatus").format("xml").option(
         "rowTag", "order"
     ).save(path)
@@ -655,9 +665,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def range_layout_path(sf_dir: str) -> str:
-    return os.path.join(
-        _SCRATCH, f"lineitem_rangelayout_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    return _sink_dir(sf_dir, "lineitem_rangelayout")
 
 
 @register(
@@ -730,7 +738,7 @@ def catalog_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source fixture."""
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     tbl = f"big_orders_{sf_tag}"
-    loc = os.path.join(_SCRATCH, f"catalog_{tbl}")
+    loc = os.path.join(relational._SCRATCH, f"catalog_{tbl}")
     t(spark, sf_dir, "orders").createOrReplaceTempView("_ddl_orders_src")
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {tbl}
@@ -837,7 +845,7 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable column checks null accounting."""
     sf_tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     tbl = f"analyze_orders_{sf_tag}"
-    loc = os.path.join(_SCRATCH, f"catalog_{tbl}")
+    loc = os.path.join(relational._SCRATCH, f"catalog_{tbl}")
     t(spark, sf_dir, "orders").createOrReplaceTempView("_an_orders_src")
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {tbl}

@@ -45,7 +45,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bishe_gpu_database_spark.operators.relational import _SCRATCH  # noqa: E402
+from bishe_gpu_database_spark.operators import relational  # noqa: E402
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
 from perfbench.harness import git_tree_hash  # noqa: E402
 from tests.conftest import (  # noqa: E402
@@ -190,7 +190,7 @@ def fresh_fixture(fixture: str, src: str) -> str:
     the engine copied from an earlier build needs purging: every
     write-once copy is named by its source files' size and mtime
     (``relational.derived_copy``), so the rebuilt files miss them all."""
-    dst = os.path.join(_SCRATCH, f"sf_{fixture}")
+    dst = os.path.join(relational._SCRATCH, f"sf_{fixture}")
     shutil.rmtree(dst, ignore_errors=True)
     PERTURBED_FIXTURES[fixture](src, dst)
     return dst

@@ -28,6 +28,19 @@ def sf_dir():
     return SF_SMALL
 
 
+@pytest.fixture(scope="session", autouse=True)
+def scratch_root(tmp_path_factory):
+    """Every copy and sink the engine writes during the run lands in one
+    pytest tmp dir, not the shared scratch root, so pytest's own
+    retention removes them."""
+    from bishe_gpu_database_spark.operators import relational
+
+    root = str(tmp_path_factory.mktemp("scratch"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(relational, "_SCRATCH", root)
+        yield root
+
+
 # Iterative drivers plan per-epoch; their inner plans are covered by the
 # single-epoch queries, so the whole-registry sweeps skip them.
 SWEEP_SKIP = {

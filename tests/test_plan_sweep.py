@@ -122,3 +122,13 @@ def test_no_plan_red_flags(sweep_plans):
         if bad:
             offenders[name] = bad
     assert not offenders, offenders
+
+
+def test_no_round_robin_exchanges(sweep_plans):
+    """Scan width is the storage layer's job: ``t()`` reads every table
+    that feeds per-row compute from its core-count re-layout, so no query
+    repartitions round-robin to reach full parallelism."""
+    offenders = sorted(
+        name for name, sp in sweep_plans.items() if "RoundRobinPartitioning" in sp.formatted
+    )
+    assert not offenders, offenders

@@ -8,7 +8,6 @@ fixture, its pairs equal the brute-force shingle join's at that tau."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -46,13 +45,13 @@ def _brute_pairs(corpus: list[list[str]]) -> set[tuple[int, int]]:
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(corpus=corpus_strategy)
-def test_prefix_filter_lossless_on_random_corpora(spark, corpus):
+def test_prefix_filter_lossless_on_random_corpora(spark, tmp_path_factory, corpus):
     from bishe_gpu_database_spark.operators.dedup import dedup_prefix_filter_join
 
     df = spark.createDataFrame(
         [(i, " ".join(w)) for i, w in enumerate(corpus)], "doc_id bigint, text string"
     )
-    d = tempfile.mkdtemp(prefix="prefix_filter_hyp_")
+    d = str(tmp_path_factory.mktemp("prefix_filter_hyp"))
     df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     got = {
         (r["doc_a"], r["doc_b"])

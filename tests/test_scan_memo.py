@@ -33,7 +33,6 @@ from bishe_gpu_database_spark.operators import relational
 from bishe_gpu_database_spark.operators.relational import t
 from bishe_gpu_database_spark.registry import REGISTRY, _ensure_loaded
 from bishe_gpu_database_spark.session import TABLE_NAMES, scoped_conf
-from bishe_gpu_database_spark.sources import formats
 from tests.conftest import SF_SMALL, compare_query_to_oracle, job_count
 
 # Build jobs the headline queries still start at SF_SMALL on a warm memo,
@@ -132,7 +131,8 @@ def test_failed_relayout_logs_and_reads_raw(spark, monkeypatch, caplog):
 
 
 # Queries that answer from a write-once copy of a fixture table: the
-# formats.py copies, the bucketed tables and one re-layout-backed query.
+# formats.py copies, the bucketed tables and one re-layout-backed query
+# per re-laid-out table family (lineitem, documents, embeddings).
 DERIVED_COPY_QUERIES = [
     "source_partition_pruning",
     "source_dpp_join",
@@ -142,6 +142,8 @@ DERIVED_COPY_QUERIES = [
     "mv_rewrite_monthly",
     "source_binaryfile",
     "q1_pricing_summary",
+    "text_quality",
+    "embedding_norms",
 ]
 
 
@@ -149,9 +151,7 @@ DERIVED_COPY_QUERIES = [
 def scratch(monkeypatch, tmp_path):
     """A scratch root of the test's own, so its copies go with it."""
     root = str(tmp_path / "scratch")
-    os.makedirs(root)
     monkeypatch.setattr(relational, "_SCRATCH", root)
-    monkeypatch.setattr(formats, "_SCRATCH", root)
     return root
 
 
@@ -163,7 +163,7 @@ def _fixture_copy(dst) -> str:
 def _halve(sf_dir: str) -> None:
     """Rewrite the tables the copies derive from with half their rows."""
     con = duckdb.connect()
-    for tbl in ("lineitem", "orders", "events", "documents"):
+    for tbl in ("lineitem", "orders", "events", "documents", "embeddings"):
         path = os.path.join(sf_dir, f"{tbl}.parquet")
         (n,) = con.execute(f"SELECT count(*) FROM '{path}'").fetchone()
         con.execute(f"COPY (SELECT * FROM '{path}' LIMIT {n // 2}) TO '{path}.new' (FORMAT PARQUET)")
